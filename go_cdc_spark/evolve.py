@@ -6,21 +6,12 @@ contract: events may carry a *superset* of the table's payload columns;
 new columns are added as nullable, missing ones fill null, and
 same-name numeric columns widen along Iceberg's safe promotion set
 (int family → long, float → double). Any other type change is a
-non-additive conflict and raises.
-
-Two equivalent alignment paths:
-- ``align_to_schema``: pure Column expressions (null-pad + cast +
-  reorder) — zero-cost under Catalyst, the default.
-- ``align_with_arrow``: the same reconciliation done vectorized at the
-  Arrow RecordBatch level inside ``mapInArrow`` — the pandas/Arrow-UDF
-  formulation the driver contract names; used when a chunk arrives as
-  Arrow batches of a foreign schema. Batch-at-a-time, no per-row
-  Python.
+non-additive conflict and raises. ``align_to_schema`` reconciles a
+DataFrame with a target schema in pure Column expressions (null-pad +
+cast + reorder), zero-cost under Catalyst.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -77,26 +68,3 @@ def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols)
-
-
-def align_with_arrow(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Arrow-level reconciliation via ``mapInArrow`` (vectorized)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    target = to_arrow_schema(schema)
-
-    def reconcile(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for b in batches:
-            arrays = []
-            for field in target:
-                if b.schema.get_field_index(field.name) >= 0:
-                    col = b.column(field.name)
-                    if col.type != field.type:
-                        col = col.cast(field.type)
-                    arrays.append(col)
-                else:
-                    arrays.append(pa.nulls(b.num_rows, type=field.type))
-            yield pa.RecordBatch.from_arrays(arrays, schema=target)
-
-    return df.mapInArrow(reconcile, schema)

@@ -66,15 +66,6 @@ def split_bad_records(df: DataFrame, op_col: str = "op") -> tuple[DataFrame, Dat
     return df.filter(is_valid), df.filter(~F.coalesce(is_valid, F.lit(False)))
 
 
-def dedupe_exact(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Exact-duplicate removal (boundary event re-read, SURVEY §2.2-1).
-
-    The LWW reduce already collapses duplicates (same order tuple ⇒ same
-    winner), so this is only needed when forwarding *raw* events.
-    """
-    return df.dropDuplicates(list(subset) if subset else None)
-
-
 def lww_resolve(
     df: DataFrame,
     key_cols: Sequence[str],

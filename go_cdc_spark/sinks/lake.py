@@ -42,9 +42,13 @@ deltas — O(batch) bytes written per epoch, the ingest-throughput mode.
   epoch either sees the old manifest (retry applies) or the new one
   (retry no-ops). ≙ upgrading the reference's at-least-once resume
   token (resume_token_store.go:33-58) to exactly-once.
+- One snapshot, one scan: every operation decides from ONE manifest
+  dict it loaded (or was handed), and ``read()`` is a single
+  explicit-schema parquet scan over that manifest's file list.
 - Additive schema evolution: the manifest carries the table schema;
-  batches with extra nullable payload columns widen it, and old data
-  files are null-padded at read (go_cdc_spark/evolve.py).
+  batches with extra nullable payload columns widen it. The read's
+  explicit schema null-fills columns older files lack and widens
+  int→long / float→double, so old files are never rewritten.
 - Order-aware rows: data files physically store the event-order tuple
   (ts_t, ts_i, seq) + op alongside the payload, and deletes persist as
   tombstones. MERGE therefore tolerates out-of-order and re-delivered
@@ -70,8 +74,6 @@ from go_cdc_spark import schemas
 from go_cdc_spark.evolve import align_to_schema, union_schema
 from go_cdc_spark.operators.merge import merge_resolved
 from go_cdc_spark.operators.resolve import lww_resolve
-
-_BUCKET = "_bucket"
 
 # Newest epoch keys kept inline in the manifest; older keys spill to
 # chained rollup files (see ParquetLakeTable._epochs_after_commit).
@@ -159,6 +161,11 @@ def prune_files_by_ranges(
                 keep.append(fname)
         out[(d, b)] = sorted(keep)
     return out
+
+
+def logical_schema(m: dict) -> T.StructType:
+    """The table's logical schema as recorded in manifest ``m``."""
+    return T.StructType.fromJson(json.loads(m["schema"]))
 
 
 def internal_schema(
@@ -279,36 +286,29 @@ class ParquetLakeTable:
         with open(os.path.join(self._commits_dir, f"v{v:012d}.json")) as fh:
             return json.load(fh)
 
-    def _write_manifest(self, m: dict) -> None:
-        # Attach the data-skipping stats the preceding _write_version_data
-        # gathered (each commit path writes at most one version dir), then
-        # drop stats for dirs no surviving pointer references — the stats
-        # map stays O(live dirs), not O(history).
-        pending = getattr(self, "_pending_stats", None)
-        pending_fs = getattr(self, "_pending_file_stats", None)
-        pending_dir = (
-            getattr(self, "_pending_stats_dir", None) or f"data/v{m['version']}"
-        )
-        # pending stats are consumed unconditionally (success OR
-        # conflict) so a later commit that writes no data can never
-        # attach a stale batch's stats; compact's conflict-rebase
-        # snapshots and restores them around each attempt.
-        self._pending_stats = None
-        self._pending_file_stats = None
-        self._pending_stats_dir = None
-        stats = {d: dict(s) for d, s in m.get("order_stats", {}).items()}
-        if pending:
-            stats[pending_dir] = pending
-        fstats = {d: dict(s) for d, s in m.get("file_stats", {}).items()}
-        if pending_fs:
-            fstats[pending_dir] = pending_fs
+    def _write_manifest(
+        self, m: dict, stats: tuple[str, dict, dict] | None = None
+    ) -> None:
+        # ``stats`` = (data dir, order stats, file stats) that
+        # _write_version_data returned for the one dir this commit wrote;
+        # attach them under that dir, then drop stats for dirs no
+        # surviving pointer references — the stats map stays O(live
+        # dirs), not O(history).
+        order_stats = dict(m.get("order_stats", {}))
+        file_stats = dict(m.get("file_stats", {}))
+        if stats is not None:
+            data_dir, dir_order_stats, dir_file_stats = stats
+            if dir_order_stats:
+                order_stats[data_dir] = dir_order_stats
+            if dir_file_stats:
+                file_stats[data_dir] = dir_file_stats
         referenced = set(m.get("buckets", {}).values()) | {
             d for ds in m.get("deltas", {}).values() for d in ds
         }
         m = {
             **m,
-            "order_stats": {d: s for d, s in stats.items() if d in referenced},
-            "file_stats": {d: s for d, s in fstats.items() if d in referenced},
+            "order_stats": {d: s for d, s in order_stats.items() if d in referenced},
+            "file_stats": {d: s for d, s in file_stats.items() if d in referenced},
         }
         target = os.path.join(self._commits_dir, f"v{m['version']:012d}.json")
         fd, tmp = tempfile.mkstemp(dir=self._commits_dir, suffix=".tmp")
@@ -331,9 +331,12 @@ class ParquetLakeTable:
 
     # ---------- properties ----------
 
+    # Convenience views of the LATEST manifest for outside callers; every
+    # operation below reads these from the one manifest it loaded instead.
+
     @property
     def schema(self) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self.manifest()["schema"]))
+        return logical_schema(self.manifest())
 
     @property
     def key_cols(self) -> list[str]:
@@ -395,11 +398,6 @@ class ParquetLakeTable:
             "epochs_rolled": m.get("epochs_rolled", 0) + len(spill),
         }
 
-    def payload_cols(self, schema: T.StructType | None = None) -> list[str]:
-        s = schema or self.schema
-        keys = set(self.key_cols)
-        return [f.name for f in s.fields if f.name not in keys]
-
     # ---------- read ----------
 
     def read(
@@ -418,7 +416,15 @@ class ParquetLakeTable:
         default is the live logical view (tombstones filtered, order
         columns dropped).
 
-        In ``mor`` mode the scan unions base + delta files and
+        The read is ONE explicit-schema parquet scan over the file list
+        the manifest names (bucket dirs, or the files ``prune_ranges``
+        keeps), whatever the number of data dirs: planning cost does not
+        grow with fragmentation. The table's internal schema is the read
+        schema, so files written before a column was added read it as
+        null and narrower numeric columns widen (int→long,
+        float→double) in the scan itself.
+
+        In ``mor`` mode the scan covers base + delta files and
         LWW-reduces to one row per key (the read-side half of
         merge-on-read); compaction bounds the delta count per bucket,
         so read amplification is ≤ ``compact_every`` small files.
@@ -441,7 +447,7 @@ class ParquetLakeTable:
         Delta-carrying buckets and files without bounds are read
         whole — conservative, never lossy."""
         m = manifest or self.manifest()
-        logical = T.StructType.fromJson(json.loads(m["schema"]))
+        logical = logical_schema(m)
         order_cols = m.get("order_cols", schemas.ORDER_COLS)
         key_cols = m["key_cols"]
         schema = internal_schema(logical, key_cols, order_cols)
@@ -460,38 +466,24 @@ class ParquetLakeTable:
             file_sel = prune_files_by_ranges(
                 pointers, deltas, m.get("file_stats", {}), prune_ranges
             )
-        # group buckets by the version dir holding their data (base
-        # pointers and delta pointers alike — one scan per dir)
-        by_dir: dict[str, list[str]] = {}
-        for b, d in pointers.items():
-            by_dir.setdefault(d, []).append(b)
-        has_deltas = False
-        for b, ds in deltas.items():
-            for d in ds:
-                has_deltas = True
-                by_dir.setdefault(d, []).append(b)
-        parts = []
-        for d, bs in sorted(by_dir.items()):
-            base = os.path.join(self.root, d)
-            paths = []
-            for b in sorted(set(bs), key=int):
-                bdir = os.path.join(base, f"bucket={b}")
-                sel = file_sel.get((d, b))
-                if sel is None:
-                    paths.append(bdir)
-                else:  # file-level prune; [] ⇒ whole bucket skipped
-                    paths.extend(os.path.join(bdir, f) for f in sel)
-            if not paths:
-                continue
-            df = self.spark.read.option("basePath", base).parquet(*paths).drop("bucket")
-            parts.append(align_to_schema(df, schema))
-        if not parts:
-            out = self.spark.createDataFrame([], schema=schema)
+        # (dir, bucket) of every base and delta pointer; leaf paths only,
+        # so the scan infers no partition column from ``bucket=`` names
+        paths = []
+        for d, b in sorted(
+            {(d, b) for b, d in pointers.items()}
+            | {(d, b) for b, ds in deltas.items() for d in ds}
+        ):
+            bdir = os.path.join(self.root, d, f"bucket={b}")
+            sel = file_sel.get((d, b))
+            if sel is None:
+                paths.append(bdir)
+            else:  # file-level prune; [] ⇒ whole bucket skipped
+                paths.extend(os.path.join(bdir, f) for f in sel)
+        if paths:
+            out = self.spark.read.schema(schema).parquet(*paths)
         else:
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-        if has_deltas:  # fold deltas: newest event per key wins
+            out = self.spark.createDataFrame([], schema=schema)
+        if any(deltas.values()):  # fold deltas: newest event per key wins
             payload = [
                 f.name for f in logical.fields if f.name not in set(key_cols)
             ]
@@ -524,7 +516,7 @@ class ParquetLakeTable:
         residual skew. No driver-side state beyond the two manifests.
         """
         keys = m_new["key_cols"]
-        new_schema = T.StructType.fromJson(json.loads(m_new["schema"]))
+        new_schema = logical_schema(m_new)
         payload = [f.name for f in new_schema.fields if f.name not in set(keys)]
         old = align_to_schema(self.read(manifest=m_old), new_schema)
         new = self.read(manifest=m_new)
@@ -588,17 +580,21 @@ class ParquetLakeTable:
     def _write_version_data(
         self,
         df: DataFrame,
-        version: int,
+        m: dict,
+        rel_dir: str,
         n_files_hint: int,
         cluster_by: list[str] | None = None,
         cluster_files: int = 8,
-        rel_dir: str | None = None,
-    ) -> dict[int, int]:
-        """Write df (must carry ``bucket`` col) under ``rel_dir``
-        (default data/v{version} — compaction passes a unique name so a
-        concurrent ingest writer racing to the same next version can
-        never overwrite its files); returns per-bucket row counts read
-        back from the written files.
+    ) -> tuple[dict[int, int], dict[str, list], dict[str, dict]]:
+        """Write df (must carry ``bucket`` col) under ``rel_dir`` — a
+        unique dir per commit attempt, so writers racing to the same
+        next version never overwrite each other's files — with the
+        layout manifest ``m`` records (key and order columns, files per
+        bucket). Returns ``(counts, order_stats, file_stats)`` read back
+        from the written footers: per-bucket row counts, per-bucket
+        [min, max] of the leading order column, and (``cluster_by``
+        only) per-file bounds of the cluster columns. The commit passes
+        the two stats maps on to :meth:`_write_manifest`.
 
         ``cluster_by`` (compaction only) range-clusters each bucket's
         rows into ~``cluster_files`` files by the given columns (ntile
@@ -607,9 +603,8 @@ class ParquetLakeTable:
         and ``read(prune_ranges=...)`` can skip whole files — the
         bucket layout (key hash) is untouched, only how a bucket's
         rows split into files changes, which MERGE never observes."""
-        rel = rel_dir or f"data/v{version}"
-        out_dir = os.path.join(self.root, *rel.split("/"))
-        fpb = int(self.manifest().get("files_per_bucket", 1))
+        out_dir = os.path.join(self.root, *rel_dir.split("/"))
+        fpb = int(m.get("files_per_bucket", 1))
         # mode=overwrite: a data dir without a manifest is garbage from a
         # crashed attempt — the retry must be able to reclaim it (the
         # manifest rename, not the data write, is the commit point).
@@ -670,7 +665,7 @@ class ParquetLakeTable:
             if fpb > 1:
                 part_cols.append(
                     F.pmod(
-                        F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(fpb)
+                        F.xxhash64(*[F.col(c) for c in m["key_cols"]]), F.lit(fpb)
                     )
                 )
             staged = df.repartition(
@@ -693,7 +688,7 @@ class ParquetLakeTable:
 
         import pyarrow.parquet as pq
 
-        order0 = self.order_cols[0]
+        order0 = m.get("order_cols", schemas.ORDER_COLS)[0]
         stat_cols = [order0] + [c for c in (cluster_by or []) if c != order0]
 
         def footer(w):
@@ -721,11 +716,8 @@ class ParquetLakeTable:
         counts: dict[int, int] = {}
         bounds: dict[int, list] = {}  # bucket -> [min, max] of order0
         fstats: dict[str, dict[str, dict[str, list]]] = {}
-        self._pending_stats = {}
-        self._pending_file_stats = {} if cluster_by else None
-        self._pending_stats_dir = rel
         if not os.path.isdir(out_dir):
-            return counts
+            return counts, {}, {}
         work = []  # (bucket, file path)
         for name in os.listdir(out_dir):
             if not name.startswith("bucket="):
@@ -738,7 +730,7 @@ class ParquetLakeTable:
                 if f.endswith(".parquet")
             )
         if not work:
-            return counts
+            return counts, {}, {}
         with ThreadPoolExecutor(max_workers=min(16, len(work))) as ex:
             rows = list(ex.map(footer, work))
         no_stats = set()
@@ -760,12 +752,8 @@ class ParquetLakeTable:
                 fstats.setdefault(str(b), {})[fname] = {
                     c: v for c, v in per_col.items() if c in set(cluster_by)
                 }
-        self._pending_stats = {
-            str(b): v for b, v in bounds.items() if b not in no_stats
-        }
-        if cluster_by:
-            self._pending_file_stats = fstats
-        return counts
+        order_stats = {str(b): v for b, v in bounds.items() if b not in no_stats}
+        return counts, order_stats, fstats
 
     def vacuum(
         self, keep_manifests: int = 8, orphan_grace_sec: float = 3600.0
@@ -914,12 +902,12 @@ class ParquetLakeTable:
             "bucket", bucket_expr(m["key_cols"], m["n_buckets"])
         )
         # unique dir: an ingest writer racing to the same next version
-        # writes data/v{version} — it must never clobber the fold (a
-        # crashed attempt leaves an orphan uuid dir; vacuum reclaims it)
+        # must never clobber the fold (a crashed attempt leaves an
+        # orphan uuid dir; vacuum reclaims it)
         data_dir = f"data/v{version}-c{uuid.uuid4().hex[:8]}"
-        counts = self._write_version_data(
-            folded, version, len(target), cluster_by=cluster_by,
-            cluster_files=cluster_files, rel_dir=data_dir,
+        counts, order_stats, file_stats = self._write_version_data(
+            folded, m, data_dir, len(target), cluster_by=cluster_by,
+            cluster_files=cluster_files,
         )
         def _manifest_on(base: dict, v: int) -> dict:
             bucket_ptrs = dict(base["buckets"])
@@ -956,23 +944,14 @@ class ParquetLakeTable:
         # elsewhere carry over from it). If an interleaved commit DID
         # touch a target bucket, the fold is stale: fail loudly, the
         # caller re-runs compact() against current state.
-        saved = (
-            getattr(self, "_pending_stats", None),
-            getattr(self, "_pending_file_stats", None),
-            getattr(self, "_pending_stats_dir", None),
-        )
         base, v = m, version
         for _ in range(8):
             try:
-                # restore the fold's data-skipping stats for this
-                # attempt (_write_manifest consumes them even on
-                # conflict, and the rebase re-commits the same data)
-                (
-                    self._pending_stats,
-                    self._pending_file_stats,
-                    self._pending_stats_dir,
-                ) = saved
-                self._write_manifest(_manifest_on(base, v))
+                # every attempt re-commits the same data dir, so it
+                # carries the same data-skipping stats
+                self._write_manifest(
+                    _manifest_on(base, v), (data_dir, order_stats, file_stats)
+                )
                 return CommitStats(
                     v, epoch_key, True, target, counts, sum(counts.values())
                 )
@@ -1023,7 +1002,7 @@ class ParquetLakeTable:
         key_cols = m["key_cols"]
         if not key_values:
             raise ValueError("lookup needs at least one key tuple")
-        by_name = {f.name: f for f in self.schema.fields}
+        by_name = {f.name: f for f in logical_schema(m).fields}
         keys_df = self.spark.createDataFrame(
             [tuple(k) for k in key_values],
             schema=T.StructType([by_name[c] for c in key_cols]),
@@ -1053,14 +1032,14 @@ class ParquetLakeTable:
         compaction this cannot proceed in per-bucket waves: it is one
         full repartition-and-write job (the same O(table) cost Iceberg
         pays to rewrite files under a new spec), made safe by the
-        atomic flip — readers and writers always derive ``bucket_expr``
-        from the live manifest, never from a cached layout, so an epoch
-        that starts after the flip merges under the new modulus and
-        time-travel reads of pre-flip manifests still see the old
-        layout. MoR deltas are folded into the new bases as a side
-        effect (the internal read already LWW-reduces; tombstones
-        survive). Idempotent per source version. No-op if the count is
-        unchanged."""
+        atomic flip — readers and writers derive ``bucket_expr`` from
+        the one manifest snapshot they act on, so an epoch that starts
+        after the flip merges under the new modulus, an epoch whose
+        snapshot predates it loses the CAS to it, and time-travel reads
+        of pre-flip manifests still see the old layout. MoR deltas are
+        folded into the new bases as a side effect (the internal read
+        already LWW-reduces; tombstones survive). Idempotent per source
+        version. No-op if the count is unchanged."""
         m = self.manifest()
         if new_n_buckets == m["n_buckets"]:
             return CommitStats(m["version"], "__rebucket_noop__", applied=False)
@@ -1080,8 +1059,8 @@ class ParquetLakeTable:
         # manifest CAS fails loudly and the caller re-runs; the orphan
         # dir is vacuumed.
         data_dir = f"data/v{version}-r{uuid.uuid4().hex[:8]}"
-        counts = self._write_version_data(
-            folded, version, new_n_buckets, rel_dir=data_dir
+        counts, order_stats, file_stats = self._write_version_data(
+            folded, m, data_dir, new_n_buckets
         )
         self._write_manifest(
             {
@@ -1094,7 +1073,8 @@ class ParquetLakeTable:
                 "deltas": {},
                 "delta_counts": {},
                 **self._epochs_after_commit(m, epoch_key, version),
-            }
+            },
+            (data_dir, order_stats, file_stats),
         )
         return CommitStats(
             version, epoch_key, True, sorted(counts), counts, sum(counts.values())
@@ -1122,17 +1102,18 @@ class ParquetLakeTable:
         m = self.manifest()
         if epoch_key in m["epochs"]:  # recent-window dup check; old epochs are skipped at orchestration via committed_epochs()
             return CommitStats(m["version"], epoch_key, applied=False)
+        key_cols = m["key_cols"]
         order_cols = m.get("order_cols", schemas.ORDER_COLS)
         internal = set(order_cols) | {"op", "bucket"}
         schema = union_schema(
-            self.schema,
+            logical_schema(m),
             T.StructType([f for f in df.schema.fields if f.name not in internal]),
         )
         version = m["version"] + 1
         # snapshot rows carry their creation stamp when the source has
         # one (≙ dumper.go:85 stamping the token from createdAt), else
         # order=-1: "older than any replayed event".
-        phys = internal_schema(schema, self.key_cols, order_cols)
+        phys = internal_schema(schema, key_cols, order_cols)
         data = align_to_schema(df, phys)
         if "op" not in df.columns:
             data = data.withColumn("op", F.lit(schemas.UPDATE_OP))
@@ -1140,7 +1121,7 @@ class ParquetLakeTable:
             if c not in df.columns:
                 data = data.withColumn(c, F.lit(-1).cast("long"))
         data = data.select(*[f.name for f in phys.fields]).withColumn(
-            "bucket", bucket_expr(self.key_cols, self.n_buckets)
+            "bucket", bucket_expr(key_cols, m["n_buckets"])
         )
         # unique dir per attempt: two ingest writers racing to the same
         # next version must never share a data dir — the CAS loser's
@@ -1149,8 +1130,8 @@ class ParquetLakeTable:
         # loser's dir becomes an orphan vacuum grace-ages away, and a
         # reload-and-retry after a commit conflict is safe.
         data_dir = f"data/v{version}-i{uuid.uuid4().hex[:8]}"
-        counts = self._write_version_data(
-            data, version, self.n_buckets, rel_dir=data_dir
+        counts, order_stats, file_stats = self._write_version_data(
+            data, m, data_dir, m["n_buckets"]
         )
         self._write_manifest(
             {
@@ -1163,7 +1144,8 @@ class ParquetLakeTable:
                 "deltas": {},
                 "delta_counts": {},
                 **self._epochs_after_commit(m, epoch_key, version),
-            }
+            },
+            (data_dir, order_stats, file_stats),
         )
         return CommitStats(
             version, epoch_key, True, sorted(counts), counts, sum(counts.values())
@@ -1176,6 +1158,7 @@ class ParquetLakeTable:
         order_cols: list[str] = schemas.ORDER_COLS,
         affected: list[int] | None = None,
         salt_partitions: int | None = None,
+        manifest: dict | None = None,
     ) -> CommitStats:
         """MERGE one batch of change events (raw or pre-reduced; the
         merge reduce collapses either — max-struct associativity).
@@ -1186,13 +1169,20 @@ class ParquetLakeTable:
         bucket ids) when the caller already computed them — saves one
         job per epoch. ``salt_partitions`` → two-phase reduce for
         pathological hot keys.
+
+        ``manifest`` is the snapshot the caller derived the batch's
+        ``bucket`` column (and ``affected``) from; the commit lands on
+        top of exactly that snapshot, so a layout flip committed since
+        (``rebucket``) fails the CAS loudly instead of merging rows
+        under a stale modulus. Default: the latest manifest.
         """
-        m = self.manifest()
+        m = manifest or self.manifest()
         if epoch_key in m["epochs"]:  # recent-window dup check; old epochs are skipped at orchestration via committed_epochs()
             return CommitStats(m["version"], epoch_key, applied=False)
 
         key_cols = m["key_cols"]
-        table_schema = self.schema
+        n_buckets = m["n_buckets"]
+        table_schema = logical_schema(m)
         batch_payload = T.StructType(
             [
                 f
@@ -1206,12 +1196,12 @@ class ParquetLakeTable:
                 [f for f in table_schema.fields if f.name in key_cols] + batch_payload.fields
             ),
         )
-        payload = self.payload_cols(new_schema)
+        payload = [f.name for f in new_schema.fields if f.name not in set(key_cols)]
 
         if "bucket" in resolved.columns:
             batch = resolved
         else:
-            batch = resolved.withColumn("bucket", bucket_expr(key_cols, self.n_buckets))
+            batch = resolved.withColumn("bucket", bucket_expr(key_cols, n_buckets))
         if affected is None:
             # Affected-bucket set: tiny (≤ n_buckets ints), safe to collect.
             affected = sorted(
@@ -1280,9 +1270,9 @@ class ParquetLakeTable:
             out = pieces[0]
             for p in pieces[1:]:
                 out = out.unionByName(p)
-            out = out.withColumn("bucket", bucket_expr(key_cols, self.n_buckets))
-            counts = self._write_version_data(
-                out, version, len(affected), rel_dir=data_dir
+            out = out.withColumn("bucket", bucket_expr(key_cols, n_buckets))
+            counts, order_stats, file_stats = self._write_version_data(
+                out, m, data_dir, len(affected)
             )
             for b in to_compact:
                 bs = str(b)
@@ -1308,9 +1298,9 @@ class ParquetLakeTable:
                 order_cols,
                 payload,
                 salt_partitions,
-            ).withColumn("bucket", bucket_expr(key_cols, self.n_buckets))
-            counts = self._write_version_data(
-                merged, version, len(affected), rel_dir=data_dir
+            ).withColumn("bucket", bucket_expr(key_cols, n_buckets))
+            counts, order_stats, file_stats = self._write_version_data(
+                merged, m, data_dir, len(affected)
             )
             for b in affected:
                 if b in counts:
@@ -1331,7 +1321,8 @@ class ParquetLakeTable:
                 "deltas": deltas,
                 "delta_counts": delta_counts,
                 **self._epochs_after_commit(m, epoch_key, version),
-            }
+            },
+            (data_dir, order_stats, file_stats),
         )
         return CommitStats(
             version, epoch_key, True, affected, counts, sum(counts.values())

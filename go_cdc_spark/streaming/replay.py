@@ -65,13 +65,20 @@ def apply_epoch(
     second full shuffle of the same data). The lineage pass (affected
     buckets, epoch HWM, per-bucket raw-event counts) is a map-side
     partial aggregate over ≤ n_buckets groups — a driver round-trip of
-    ≤ n_buckets rows, no wide shuffle, no persist."""
+    ≤ n_buckets rows, no wide shuffle, no persist.
+
+    The epoch acts on ONE manifest snapshot: the bucket column is
+    derived from its ``n_buckets`` and the MERGE commits on top of it,
+    so a ``rebucket`` that lands mid-epoch fails this epoch's commit
+    loudly (re-run to apply it under the new layout) instead of letting
+    it merge rows under the old modulus."""
     from go_cdc_spark.operators.resolve import checked_op
     from go_cdc_spark.sinks.lake import bucket_expr
 
     t0 = time.time()
     events = events.drop("segment") if "segment" in events.columns else events
-    bucketed = events.withColumn("bucket", bucket_expr(cfg.key_cols, lake.n_buckets))
+    m = lake.manifest()
+    bucketed = events.withColumn("bucket", bucket_expr(cfg.key_cols, m["n_buckets"]))
     per_bucket = bucketed.groupBy("bucket").agg(
         F.max(F.struct(*cfg.order_cols)).alias("m"),
         F.count("*").alias("n"),
@@ -90,6 +97,7 @@ def apply_epoch(
         order_cols=cfg.order_cols,
         affected=affected,
         salt_partitions=cfg.salt_partitions,
+        manifest=m,
     )
     dt = time.time() - t0
     bookmarks.record(

@@ -1,12 +1,12 @@
-"""Additive schema evolution: union_schema rules and the two
-equivalent alignment paths (Column exprs vs Arrow mapInArrow)."""
+"""Additive schema evolution: union_schema rules, column alignment,
+and widening through the lake sink."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import types as T
 
-from go_cdc_spark.evolve import align_to_schema, align_with_arrow, union_schema
+from go_cdc_spark.evolve import align_to_schema, union_schema
 
 TARGET = T.StructType(
     [
@@ -30,15 +30,13 @@ def test_union_schema_additive_and_conflict():
         union_schema(base, bad)
 
 
-def test_column_and_arrow_alignment_agree(spark):
+def test_align_to_schema_pads_and_reorders(spark):
     # input: wrong column order, missing column c
     df = spark.createDataFrame([("x", 7), ("y", 8)], ["b", "a"])
-    via_cols = align_to_schema(df, TARGET).collect()
-    via_arrow = align_with_arrow(df, TARGET).collect()
-    assert sorted(via_cols) == sorted(via_arrow)
-    r = sorted(via_cols)[0]
+    aligned = align_to_schema(df, TARGET)
+    r = sorted(aligned.collect())[0]
     assert (r["a"], r["b"], r["c"]) == (7, "x", None)
-    assert align_with_arrow(df, TARGET).schema == TARGET
+    assert aligned.schema == TARGET
 
 
 def test_union_schema_widens_numerics():

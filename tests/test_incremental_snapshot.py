@@ -202,10 +202,13 @@ def test_rebucket_between_chunks_is_invisible(spark, tmpdir_path):
     keys = [tuple(r[c] for c in cfg.key_cols) for r in some]
     got = {tuple(r[c] for c in cfg.key_cols) for r in lake.lookup(keys).collect()}
     assert got == set(keys)
-    internal = lake.read(internal=True).withColumn(
-        "_want", bucket_expr(cfg.key_cols, 16)
+    # the bucket a row physically sits in is its file's bucket=N dir
+    internal = lake.read(internal=True).select(
+        F.regexp_extract("_metadata.file_path", r"/bucket=(\d+)/", 1)
+        .cast("long").alias("_dir"),
+        bucket_expr(cfg.key_cols, 16).alias("_want"),
     )
-    assert internal.filter(F.col("bucket") != F.col("_want")).count() == 0
+    assert internal.filter(~F.col("_dir").eqNullSafe(F.col("_want"))).count() == 0
 
 
 def test_rebucket_racing_chunk_commit_conflicts_then_resumes(spark, tmpdir_path):
@@ -225,13 +228,13 @@ def test_rebucket_racing_chunk_commit_conflicts_then_resumes(spark, tmpdir_path)
     real = ParquetLakeTable._write_manifest
     fired = []
 
-    def race_once(self, m):
+    def race_once(self, m, stats=None):
         # inject the layout flip inside chunk 1's CAS window: after its
         # data dir is written, before its manifest commit
         if m.get("epoch_key") == victim_key and not fired:
             fired.append(1)
             ParquetLakeTable.load(spark, cfg.table_root).rebucket(16)
-        return real(self, m)
+        return real(self, m, stats)
 
     ParquetLakeTable._write_manifest = race_once
     try:

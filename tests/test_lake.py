@@ -852,6 +852,91 @@ def test_read_prune_ranges_matches_filter_and_skips_files(spark, tmpdir_path):
     assert open_pruned.count() == t.read(internal=True).filter("ts_t >= 40").count()
 
 
+def test_one_scan_reads_fragmented_evolved_mor_table(spark, tmpdir_path):
+    """read() is ONE parquet scan however many data dirs the manifest
+    names. Over 20 live dirs (one delta dir per epoch), a column added
+    mid-history, MoR deltas, ``prune_ranges`` and ``changed_after``,
+    every read's executed plan holds exactly one FileScan, the full read
+    equals the pandas oracle, and the pruned reads equal what the last
+    event per key says they must return."""
+    import pandas as pd
+
+    from go_cdc_spark.oracle import replay_oracle
+    from go_cdc_spark.sinks.lake import bucket_expr
+
+    def file_scans(df):
+        return df._jdf.queryExecution().executedPlan().toString().count("FileScan")
+
+    t = ParquetLakeTable.create(
+        spark, tmpdir_path, schemas.TABLE_SCHEMA, K, 4, mode="mor",
+        compact_every=100,
+    )
+    keys = [(f"r{i}", "p", "c") for i in range(40)]
+    kdf = spark.createDataFrame(keys, "repo string, path string, commit string")
+    bucket = {
+        (r["repo"], r["path"], r["commit"]): r["b"]
+        for r in kdf.select(*K, bucket_expr(K, 4).alias("b")).collect()
+    }
+    events = [_row_t("i", 1 + i, k, f"v{i}") + (None,) for i, k in enumerate(keys)]
+    t.apply_batch(_resolved(spark, [e[:-1] for e in events]), "e0")
+    # buckets 0/1: one clustered base each, with per-file bounds on ts_t
+    t.compact(buckets=[0, 1], cluster_by=["ts_t"], cluster_files=4)
+    # buckets 2/3: one delta dir per epoch; a delete; column n from e10
+    hot = [k for k in keys if bucket[k] >= 2]
+    for e in range(1, 19):
+        batch = []
+        for j, k in enumerate(hot[(2 * e) % len(hot):][:2]):
+            op = "d" if e == 9 and j == 0 else "u"
+            n = e if e >= 10 else None
+            batch.append(_row_t(op, 1000 + 10 * e + j, k, f"e{e}") + (n,))
+        events += batch
+        df = _events(spark, [b[:-1] for b in batch])
+        payload = list(P)
+        if e >= 10:
+            df = df.withColumn("n", F.lit(e).cast("long"))
+            payload.append("n")
+        t.apply_batch(lww_resolve(df, K, O, payload), f"e{e}")
+    m = t.manifest()
+    live_dirs = set(m["buckets"].values()) | {
+        d for ds in m["deltas"].values() for d in ds
+    }
+    assert len(live_dirs) >= 16 and not m["deltas"].get("0")
+
+    full = t.read()
+    assert file_scans(full) == 1
+    out_cols = [*K, "lang", "content", "n"]
+    want = replay_oracle(
+        pd.DataFrame(events, columns=["op", *O, *out_cols], dtype=object),
+        payload_cols=("lang", "content", "n"),
+    )
+    assert sorted(tuple(r) for r in full.select(*out_cols).collect()) == [
+        tuple(None if pd.isna(v) else v for v in row)
+        for row in want[out_cols].itertuples(index=False)
+    ]
+
+    last = {}  # key -> its newest event
+    for ev in sorted(events, key=lambda ev: ev[1:4]):
+        last[ev[4:7]] = ev
+    n_files = len(t.read(internal=True).inputFiles())
+    lo, hi = 5, 15  # inside the clustered buckets' ts_t range
+    pruned = t.read(prune_ranges={"ts_t": (lo, hi)}, internal=True)
+    assert file_scans(pruned) == 1
+    assert len(pruned.inputFiles()) < n_files
+    got = pruned.filter(F.col("ts_t").between(lo, hi)).select(*K).collect()
+    assert {tuple(r) for r in got} == {
+        k for k, ev in last.items() if lo <= ev[1] <= hi
+    }
+
+    token = (1000 + 10 * 12, 0, 0)
+    changed = t.read(internal=True, changed_after=token)
+    assert file_scans(changed) == 1
+    assert len(changed.inputFiles()) < n_files
+    got = t.changed_since(token).select(*K, "op").collect()
+    assert {tuple(r[:3]): r["op"] for r in got} == {
+        k: ev[0] for k, ev in last.items() if ev[1:4] > token
+    }
+
+
 def test_prune_files_by_ranges_conservative():
     """Delta-carrying buckets, missing stats, and missing column bounds
     are never pruned; disjoint bounds are."""
@@ -959,11 +1044,11 @@ def test_compact_rebases_over_concurrent_commit_to_other_bucket(
     real = t._write_manifest
     fired = []
 
-    def race_once(m):
+    def race_once(m, stats=None):
         if not fired:  # inject a concurrent ingest before compact's commit
             fired.append(1)
             t2.apply_batch(_resolved(spark, [_row("i", 2, kb, "b1")]), "e2")
-        return real(m)
+        return real(m, stats)
 
     t._write_manifest = race_once
     try:
@@ -974,8 +1059,11 @@ def test_compact_rebases_over_concurrent_commit_to_other_bucket(
     out = {r["repo"]: r["content"] for r in t.read().collect()}
     assert out == {ka[0]: "a1", kb[0]: "b1"}  # neither commit lost
     m = t.manifest()
-    assert str(_bucket_of(spark, ka, 8)) in m["buckets"]  # fold committed
+    ba = str(_bucket_of(spark, ka, 8))
+    assert ba in m["buckets"]  # fold committed
     assert set(m["epochs"]) >= {"e1", "e2"}
+    # the rebased commit still carries the fold's data-skipping stats
+    assert ba in m["order_stats"][m["buckets"][ba]]
 
 
 def test_compact_fails_loudly_when_target_bucket_changed(spark, tmpdir_path):
@@ -994,11 +1082,11 @@ def test_compact_fails_loudly_when_target_bucket_changed(spark, tmpdir_path):
     real = t._write_manifest
     fired = []
 
-    def race_once(m):
+    def race_once(m, stats=None):
         if not fired:  # concurrent update to the SAME key/bucket
             fired.append(1)
             t2.apply_batch(_resolved(spark, [_row("u", 2, ka, "a2")]), "e2")
-        return real(m)
+        return real(m, stats)
 
     t._write_manifest = race_once
     try:
@@ -1013,28 +1101,38 @@ def test_compact_fails_loudly_when_target_bucket_changed(spark, tmpdir_path):
     assert t.manifest()["deltas"] == {}
 
 
-def test_pending_stats_consumed_on_conflict_never_leak(tmpdir_path):
-    """Pending data-skipping stats are consumed by _write_manifest even
-    when the commit CAS loses: a later commit that writes no data must
-    not attach the failed batch's stats under a stale dir key. (No
-    Spark needed — the manifest layer is pure filesystem.)"""
+def test_commit_stats_only_attach_to_the_commit_that_wrote_them(tmpdir_path):
+    """Data-skipping stats travel with the commit that wrote their dir:
+    after a commit carrying them loses the CAS, a later commit that
+    writes no data records no stats for the stale dir; a winning commit
+    records them under its dir, and stats of dirs no pointer references
+    are dropped. (No Spark needed — the manifest layer is pure
+    filesystem.)"""
     import pytest
 
     t = ParquetLakeTable(None, tmpdir_path)
     os.makedirs(t._commits_dir)
-    t._pending_stats = {"0": [1, 2]}
-    t._pending_stats_dir = "data/vSTALE"
+    stale = ("data/vSTALE", {"0": [1, 2]}, {"0": {"f.parquet": {"n": [1, 2]}}})
     # a winner already holds version 1
     with open(os.path.join(t._commits_dir, "v000000000001.json"), "w") as fh:
         fh.write("{}")
     losing = {"version": 1, "buckets": {"0": "data/vSTALE"}, "epochs": []}
     with pytest.raises(RuntimeError, match="commit conflict"):
-        t._write_manifest(losing)
-    assert t._pending_stats is None  # consumed, not leaked
+        t._write_manifest(losing, stale)
     # later data-less commit: stale stats must not appear
     t._write_manifest({"version": 2, "buckets": {"0": "data/vSTALE"}, "epochs": []})
     m2 = t.manifest_at(2)
-    assert "data/vSTALE" not in m2.get("order_stats", {})
+    assert "data/vSTALE" not in m2["order_stats"]
+    assert "data/vSTALE" not in m2["file_stats"]
+    # a winning commit records its dir's stats; the pointer move drops
+    # the superseded dir's
+    t._write_manifest(
+        {**m2, "version": 3, "buckets": {"0": "data/vNEW"}},
+        ("data/vNEW", {"0": [3, 4]}, {}),
+    )
+    m3 = t.manifest_at(3)
+    assert m3["order_stats"] == {"data/vNEW": {"0": [3, 4]}}
+    assert m3["file_stats"] == {}
 
 
 def test_vacuum_grace_ages_orphans_but_reclaims_superseded_now(

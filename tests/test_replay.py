@@ -109,6 +109,47 @@ def test_kill_mid_replay_then_resume(spark, tmpdir_path):
     assert replay_chunked(spark, cfg) == []
 
 
+def test_rebucket_racing_an_epoch_fails_its_commit(spark, tmpdir_path):
+    """A rebucket that commits after an epoch assigned its buckets but
+    before the epoch's MERGE commits must make the epoch lose the CAS —
+    never commit it with rows bucketed under the old modulus. A plain
+    re-run applies the epoch under the new layout: the final state
+    equals the oracle, with that epoch recorded exactly once."""
+    import pytest
+
+    cfg = _cfg(tmpdir_path)
+    spec = LogSpec(n_events=800, segment_events=400, seed=17)
+    write_segments(spark, spec, cfg.source_log_path)
+    ParquetLakeTable.create(
+        spark, cfg.table_root, schemas.TABLE_SCHEMA, cfg.key_cols, cfg.n_buckets
+    )
+    victim = f"tail-{cfg.pipeline_id}-1"
+    real = ParquetLakeTable.apply_batch
+    fired = []
+
+    def rebucket_first(self, *args, **kwargs):
+        if kwargs.get("epoch_key") == victim and not fired:
+            fired.append(1)
+            ParquetLakeTable.load(spark, cfg.table_root).rebucket(2 * cfg.n_buckets)
+        return real(self, *args, **kwargs)
+
+    ParquetLakeTable.apply_batch = rebucket_first
+    try:
+        with pytest.raises(RuntimeError, match="commit conflict"):
+            replay_chunked(spark, cfg)
+    finally:
+        ParquetLakeTable.apply_batch = real
+    assert fired
+    lake = ParquetLakeTable.load(spark, cfg.table_root)
+    mid = lake.manifest()
+    assert mid["n_buckets"] == 2 * cfg.n_buckets
+    assert victim not in mid["epochs"]
+
+    assert [r.epoch for r in replay_chunked(spark, cfg)] == [1]
+    assert lake.manifest()["epochs"].count(victim) == 1
+    assert _fingerprint(lake) == _oracle_fp(spark, cfg.source_log_path)
+
+
 def test_snapshot_then_tail_overlap(spark, tmpdir_path):
     from go_cdc_spark.operators.resolve import lww_resolve
 
