@@ -1265,7 +1265,7 @@ def q_sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column plumbing with stubbed codec, emitted as scalar
+    """Binary-column plumbing with hash-derived features, emitted as scalar
     columns only (``features_fingerprint`` digests the float vector)
     so the harness can canonicalise every column and DuckDB can mirror
     the whole hash chain exactly."""
@@ -1275,7 +1275,7 @@ def q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthetic_media,
     )
 
-    feats = extract_features(synthetic_media(spark, 1000), codec="fake")
+    feats = extract_features(synthetic_media(spark, 1000))
     return feats.select(
         "media_id",
         "kind",
@@ -2127,7 +2127,7 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_a, doc_b, n_shared FROM pairs WHERE n_shared >= 5"
         ),
         "mm_features": (
-            # Mirrors the fake codec exactly: payload = sha256 digest of
+            # Mirrors extract_features exactly: payload = sha256 digest of
             # 'payload{id}'; payload_sha = sha256 of its lowercase hex;
             # the 16 uint16 features are the payload_sha digest bytes, so
             # the quantised-vector fingerprint is sha256(payload_sha).

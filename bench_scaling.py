@@ -356,21 +356,28 @@ def main() -> None:
                 # threads for short trials)
                 load_before = round(os.getloadavg()[0], 1)
                 membw_before = _membw_gbps() if args.min_membw is not None else None
-                out = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__), "--worker-cpus", str(cpus),
-                     "--log-dir", log_dir, "--n-buckets", str(args.n_buckets),
-                     "--mode", args.mode, "--data-dir", d],
-                    capture_output=True, text=True, timeout=3600,
-                )
-                line = next(
-                    (ln for ln in out.stdout.splitlines() if ln.startswith("WORKER_RESULT ")),
-                    None,
-                )
-                if line is not None:
-                    break
-                sys.stderr.write(out.stdout[-2000:] + out.stderr[-4000:])
+                try:
+                    out = subprocess.run(
+                        [sys.executable, os.path.abspath(__file__), "--worker-cpus", str(cpus),
+                         "--log-dir", log_dir, "--n-buckets", str(args.n_buckets),
+                         "--mode", args.mode, "--data-dir", d],
+                        capture_output=True, text=True, timeout=3600,
+                    )
+                except subprocess.TimeoutExpired:
+                    # a hung worker JVM is one failed attempt, not a dead campaign
+                    why = "hung past the 3600 s timeout"
+                else:
+                    line = next(
+                        (ln for ln in out.stdout.splitlines()
+                         if ln.startswith("WORKER_RESULT ")),
+                        None,
+                    )
+                    if line is not None:
+                        break
+                    sys.stderr.write(out.stdout[-2000:] + out.stderr[-4000:])
+                    why = "died"
                 sys.stderr.write(
-                    f"\nworker local[{cpus}] died (attempt {attempt + 1}/3); "
+                    f"\nworker local[{cpus}] {why} (attempt {attempt + 1}/3); "
                     "retrying in a fresh JVM\n",
                 )
                 sys.stderr.flush()

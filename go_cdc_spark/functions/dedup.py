@@ -3,11 +3,11 @@
 Scale design notes (the 100 TB story):
 - exact: one groupBy on a 128-bit fingerprint — shuffle carries
   (fingerprint, id), never the text.
-- token-Jaccard: explode to (token, doc) postings, self-join on token
-  (shuffle co-partitioned by token), count shared tokens, then one
-  broadcast-able per-doc-cardinality join. Works when the token
-  vocabulary is large (postings lists short); for web-scale corpora
-  use the MinHash-LSH variant instead.
+- token-Jaccard: AllPairs prefix filter over (token, doc) postings,
+  verified by one join back to the token arrays. Works when the token
+  vocabulary is large (postings lists short); a tiny vocabulary runs
+  the sharded block-pair GEMM instead. For web-scale corpora use the
+  MinHash-LSH variant.
 - MinHash-LSH: per-doc signatures via a *vectorized* pandas UDF
   (numpy matrix ops over Arrow batches — no per-row Python), banded
   into buckets; only same-bucket candidates are joined. Candidate
@@ -22,6 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from go_cdc_spark.functions.similarity import _block_pairs, _shard_count
 from go_cdc_spark.functions.text import fingerprint
 
 # ---------------- exact ----------------
@@ -101,143 +102,28 @@ def _token_arrays(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _jaccard_dense(
-    df: DataFrame,
-    vocab: list[str],
-    threshold: float,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Dense-vocabulary regime, SMALL-corpus implementation: every
-    token is effectively a stopword, so posting-list pruning (prefix
-    filter) cannot prune — the answer really is near-all-pairs. Encode
-    each doc as a float32 incidence row over the vocabulary and compute
-    ALL pairwise intersections with one blocked numpy GEMM per Arrow
-    batch against the broadcast corpus matrix. Driver+broadcast memory
-    is n_docs × |vocab| × 4 B (float32) — 100k docs × 4096 vocab ≈
-    1.6 GB, which is why :func:`jaccard_pairs` gates this path on
-    ``dense_driver_max_docs`` and routes bigger corpora to the fully
-    distributed :func:`_jaccard_dense_blocked`.
-    Exact: |A∩B| from the GEMM, |A∪B| = |A|+|B|−|A∩B|.
-    """
-    idx = {t: i for i, t in enumerate(vocab)}
-    arrs = _token_arrays(df, text_col, id_col)
-    pdf = arrs.toPandas()
-    ids = pdf[id_col].to_numpy()
-    if len(ids) == 0:
-        return df.sparkSession.createDataFrame(
-            [], f"doc_a long, doc_b long, jaccard double"
-        )
-    # float32: intersection counts are ≤ |vocab| ≤ 4096 « 2^24, exact
-    mat = np.zeros((len(ids), len(vocab)), dtype=np.float32)
-    for r, toks in enumerate(pdf["_toks"]):
-        for t in toks:
-            mat[r, idx[t]] = 1.0
-    sizes = mat.sum(axis=1)
-    bc = df.sparkSession.sparkContext.broadcast((ids, mat, sizes))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_a", T.LongType()),
-            T.StructField("doc_b", T.LongType()),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
-    )
-
-    def compute(it):
-        c_ids, c_mat, c_sizes = bc.value
-        c_sizes64 = c_sizes.astype(np.float64)
-        # Per-partition scratch reused across Arrow batches: the naive
-        # expression allocates five fresh rows×N temporaries per batch
-        # (incidence matrix, f32 GEMM out, f64 cast, union, rounded
-        # quotient, bool mask) — fresh-page allocation is the slowest
-        # path on a busy host and dominates the all-pairs kernel. The
-        # float64 op order (cast, add, subtract, divide, round) is
-        # unchanged, so the 6-decimal values stay bit-equal to the SQL
-        # oracle. Where union == 0 both docs are empty, so inter == 0
-        # and the skipped divide leaves the exact 0.0 np.where produced.
-        scratch: dict[str, np.ndarray] = {}
-
-        def _buf(name: str, rows: int, cols: int, dtype) -> np.ndarray:
-            b = scratch.get(name)
-            if b is None or b.shape[0] < rows or b.shape[1] != cols:
-                b = np.empty((max(rows, b.shape[0] if b is not None else 0), cols),
-                             dtype=dtype)
-                scratch[name] = b
-            return b[:rows]
-
-        for block in it:
-            b_ids = block[id_col].to_numpy()
-            rows, nc = len(b_ids), c_mat.shape[0]
-            m = _buf("m", rows, c_mat.shape[1], np.float32)
-            m.fill(0.0)
-            for r, toks in enumerate(block["_toks"]):
-                for t in toks:
-                    m[r, idx[t]] = 1.0
-            # GEMM in float32 (counts are exact there); divide in float64
-            # so the 6-decimal round matches the SQL oracle bit-for-bit
-            inter32 = _buf("inter32", rows, nc, np.float32)
-            np.matmul(m, c_mat.T, out=inter32)
-            inter = _buf("inter", rows, nc, np.float64)
-            np.copyto(inter, inter32)
-            union = _buf("union", rows, nc, np.float64)
-            np.add(m.sum(axis=1, dtype=np.float64)[:, None], c_sizes64[None, :],
-                   out=union)
-            np.subtract(union, inter, out=union)
-            mask = _buf("mask", rows, nc, np.bool_)
-            np.greater(union, 0, out=mask)
-            jac = inter
-            np.divide(inter, union, out=jac, where=mask)
-            np.round(jac, 6, out=jac)
-            np.greater_equal(jac, threshold, out=mask)
-            ia, ib = np.nonzero(mask)
-            keep = b_ids[ia] < c_ids[ib]
-            yield pd.DataFrame(
-                {
-                    "doc_a": b_ids[ia][keep],
-                    "doc_b": c_ids[ib][keep],
-                    "jaccard": jac[ia, ib][keep],
-                }
-            )
-
-    return arrs.mapInPandas(compute, schema=out_schema)
-
-
-_PAIRS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_a", T.LongType()),
-        T.StructField("doc_b", T.LongType()),
-        T.StructField("jaccard", T.DoubleType()),
-    ]
-)
-
-
 def _jaccard_dense_blocked(
     df: DataFrame,
     vocab: list[str],
     threshold: float,
     text_col: str,
     id_col: str,
-    n_shards: int = 32,
+    n_shards: int,
 ) -> DataFrame:
-    """Dense-vocabulary regime at LARGE doc counts — fully distributed
-    block-nested-loop: the driver holds only the vocabulary index.
+    """Dense-vocabulary regime: exact all-pairs via
+    :func:`~go_cdc_spark.functions.similarity._block_pairs`; the driver
+    holds only the vocabulary index.
 
     Exact all-pairs over a tiny vocabulary is inherently O(n_docs²)
     comparisons; what must NOT be O(n_docs) is driver memory. Each doc
-    becomes a packed incidence bitmask (|vocab|/8 bytes, BinaryType),
-    docs are hashed into ``n_shards`` shards, and every unordered shard
-    pair (s ≤ t) forms one task group: docs of shard u fan out as side
-    A to groups (u,t≥u) and as side B to groups (s≤u,u) — pair keys via
-    a JVM-side ``sequence``+``explode``, so each unordered doc pair
-    lands in exactly one group. The per-group verifier unpacks bits and
-    runs one float32 GEMM. Shuffle volume is n_docs·(n_shards+1) mask
-    rows; compare work spreads over n_shards·(n_shards+1)/2 tasks —
-    driver state is O(|vocab|) regardless of corpus size.
+    becomes a packed incidence bitmask (|vocab|/8 bytes, BinaryType);
+    the per-block scorer unpacks the bits and runs one float32 GEMM
+    (intersection counts ≤ |vocab| ≤ 4096 « 2^24 are exact there), then
+    divides in float64 so the 6-decimal round matches the SQL oracle
+    bit-for-bit. |A∪B| = |A|+|B|−|A∩B|.
     """
     V = len(vocab)
     idx = {t: i for i, t in enumerate(vocab)}  # closure-shipped: vocab only
-    s_lit = F.lit(n_shards)
 
     mask_schema = T.StructType(
         [
@@ -262,82 +148,27 @@ def _jaccard_dense_blocked(
                 }
             )
 
-    masks = (
-        _token_arrays(df, text_col, id_col)
-        .mapInPandas(to_masks, schema=mask_schema)
-        .withColumn("shard", F.pmod(F.xxhash64("id"), s_lit).cast("int"))
-    )
-    # side A of groups (u, t) for t in [u, S); side B of (s, u) for s in [0, u]
-    a_side = masks.select(
-        "id", "mask", "size", F.lit(0).alias("role"),
-        F.explode(
-            F.sequence(F.col("shard") * s_lit + F.col("shard"),
-                       F.col("shard") * s_lit + s_lit - 1)
-        ).alias("pair"),
-    )
-    b_side = masks.select(
-        "id", "mask", "size", F.lit(1).alias("role"),
-        F.explode(
-            F.sequence(F.col("shard"), F.col("shard") * s_lit + F.col("shard"), s_lit)
-        ).alias("pair"),
-    )
-    both = a_side.unionByName(b_side)
+    def unpack(side: pd.DataFrame) -> np.ndarray:
+        packed = np.frombuffer(b"".join(side["mask"]), dtype=np.uint8)
+        return np.unpackbits(packed.reshape(len(side), -1), axis=1)[:, :V].astype(np.float32)
 
-    def cross_score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        from go_cdc_spark.functions.similarity import _GEMM_ROW_CHUNK
-
-        pair = int(key[0])
-        diagonal = (pair // n_shards) == (pair % n_shards)
-        left = pdf[pdf["role"] == 0]
-        right = pdf[pdf["role"] == 1]
-        if diagonal:
-            # same shard appears in both roles — score one copy against itself
-            right = left
-        if left.empty or right.empty:
-            return pd.DataFrame(
-                {
-                    "doc_a": np.array([], dtype=np.int64),
-                    "doc_b": np.array([], dtype=np.int64),
-                    "jaccard": np.array([], dtype=np.float64),
-                }
-            )
-        la = np.unpackbits(
-            np.frombuffer(b"".join(left["mask"]), dtype=np.uint8).reshape(len(left), -1),
-            axis=1,
-        )[:, :V].astype(np.float32)
-        rb = np.unpackbits(
-            np.frombuffer(b"".join(right["mask"]), dtype=np.uint8).reshape(len(right), -1),
-            axis=1,
-        )[:, :V].astype(np.float32)
+    def score(left: pd.DataFrame, right: pd.DataFrame):
+        la, rb = unpack(left), unpack(right)
         sizes_a = left["size"].to_numpy().astype(np.float64)
         sizes_b = right["size"].to_numpy().astype(np.float64)
-        l_ids = left["id"].to_numpy()
-        r_ids = right["id"].to_numpy()
-        outs = []
-        # row-chunk the left side: caps the inter/union/jac temporaries
-        # at chunk × block_rows doubles instead of block_rows²
-        for lo in range(0, len(la), _GEMM_ROW_CHUNK):
-            hi = lo + _GEMM_ROW_CHUNK
+
+        def chunk(lo: int, hi: int):
             inter = (la[lo:hi] @ rb.T).astype(np.float64)
             union = sizes_a[lo:hi, None] + sizes_b[None, :] - inter
             with np.errstate(divide="ignore", invalid="ignore"):
                 jac = np.round(np.where(union > 0, inter / union, 0.0), 6)
             ia, ib = np.nonzero(jac >= threshold)
-            a_ids = l_ids[lo:hi][ia]
-            b_ids = r_ids[ib]
-            vals = jac[ia, ib]
-            if diagonal:
-                # every pair appears twice (roles swapped) — keep one order
-                keep = a_ids < b_ids
-                a_ids, b_ids, vals = a_ids[keep], b_ids[keep], vals[keep]
-            else:
-                # disjoint shards: each pair appears once, in arbitrary id
-                # order — canonicalise, never filter
-                a_ids, b_ids = np.minimum(a_ids, b_ids), np.maximum(a_ids, b_ids)
-            outs.append(pd.DataFrame({"doc_a": a_ids, "doc_b": b_ids, "jaccard": vals}))
-        return pd.concat(outs, ignore_index=True)
+            return ia, ib, jac[ia, ib]
 
-    return both.groupBy("pair").applyInPandas(cross_score, schema=_PAIRS_SCHEMA)
+        return chunk
+
+    masks = _token_arrays(df, text_col, id_col).mapInPandas(to_masks, schema=mask_schema)
+    return _block_pairs(masks, n_shards, score, "jaccard")
 
 
 def jaccard_pairs(
@@ -346,8 +177,6 @@ def jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     dense_vocab_max: int = 4096,
-    dense_driver_max_docs: int = 100_000,
-    dense_shards: int = 32,
 ) -> DataFrame:
     """Near-duplicate pairs by token-set Jaccard ≥ threshold — EXACT,
     via the AllPairs/PPJoin prefix filter.
@@ -373,36 +202,19 @@ def jaccard_pairs(
     Degenerate regime: when the measured vocabulary is tiny
     (≤ ``dense_vocab_max``), every token is a stopword, no posting-list
     scheme can prune, and the true answer is near-all-pairs — the
-    planner switches to an incidence-matrix GEMM, which is ~50× faster
-    there. The dense regime itself has two implementations gated on
-    doc count (the vocabulary bounds columns, not rows — a billion-doc
-    corpus with a 31-token vocabulary must still never hit the driver):
-
-    - ≤ ``dense_driver_max_docs``: :func:`_jaccard_dense` — driver
-      collects the corpus once and broadcasts a float32 incidence
-      matrix (100k docs × 4096 vocab × 4 B ≈ 1.6 GB, the ceiling this
-      default is sized to).
-    - above it: :func:`_jaccard_dense_blocked` — sharded block-pair
-      GEMM over packed bitmasks; driver state is O(|vocab|) only.
-
-    All three paths return identical results.
+    planner switches to :func:`_jaccard_dense_blocked`, a sharded
+    bitmask GEMM that is far faster there. Its driver state is
+    O(|vocab|) whatever the doc count, and its shard count follows the
+    corpus size and the cluster's parallelism. Both regimes return
+    identical results.
     """
     toks = _tokens(df, text_col, id_col)
     dfreq = toks.groupBy("token").agg(F.count("*").alias("_df"))
     vocab = [r["token"] for r in dfreq.select("token").limit(dense_vocab_max + 1).collect()]
     if len(vocab) <= dense_vocab_max:
-        # limit-probe gate (stops at the threshold row — no full scan);
-        # only the blocked regime pays for an exact count, which then
-        # sizes the shard grid so per-task GEMM blocks stay bounded
-        probe = df.select(id_col).limit(dense_driver_max_docs + 1).count()
-        if probe <= dense_driver_max_docs:
-            return _jaccard_dense(df, sorted(vocab), threshold, text_col, id_col)
-        from go_cdc_spark.functions.similarity import _scaled_shards
-
-        n_docs = df.select(id_col).count()
+        n_shards = _shard_count(df.sparkSession, df.select(id_col).count())
         return _jaccard_dense_blocked(
-            df, sorted(vocab), threshold, text_col, id_col,
-            n_shards=_scaled_shards(n_docs, dense_shards),
+            df, sorted(vocab), threshold, text_col, id_col, n_shards
         )
     posts = toks.join(dfreq, "token")
     w = Window.partitionBy(id_col).orderBy("_df", "token")

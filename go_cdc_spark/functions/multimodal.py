@@ -1,12 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
-The Spark-side machinery (schemas, partition-aware batching, Arrow UDF
-signatures, metadata typing) is real and tested; the codec step itself
-is STUBBED because no image/audio libraries exist in this container —
-``decode_images(..., codec="real")`` raises NotImplementedError, and
-``codec="fake"`` produces a deterministic hash-derived feature vector
-with the exact shapes/dtypes a real decoder would emit, so downstream
-operators (dedup, ANN over the features) are fully exercisable.
+The Spark-side machinery (schemas, metadata typing, frame-sampling
+fan-out) is real and tested. No codec is bundled: ``extract_features``
+derives a deterministic feature vector from the payload hash, with the
+shapes/dtypes a real decoder would emit, so downstream operators
+(dedup, ANN over the features) are fully exercisable.
 
 Media schema convention:
 
@@ -72,49 +70,14 @@ def synthetic_media(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
 
 _FEATURE_DIM = 16
 
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload_sha", T.StringType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def extract_features(df: DataFrame, codec: str = "fake") -> DataFrame:
-    """Decode + feature-extract.
-
-    codec="real" is the mapInPandas (Arrow-batched) decode skeleton a
-    real PIL/torchaudio/ffmpeg codec would plug into — it raises
-    NotImplementedError AT EXECUTION (no media libs in this container)
-    so the batch flow, schema, and UDF signature stay exercised by
-    tests. codec="fake" emits a deterministic 16-dim feature vector
-    derived from the payload hash as PURE Column expressions — fully
-    codegen'd JVM, no Python workers, no fresh-Arrow allocation (the
-    round-3 bench recorded this path at ~100× its clean cost purely
-    from host page-fault-path collapse hitting Arrow buffer allocation;
-    a hash chain never needed Python in the first place).
+def extract_features(df: DataFrame) -> DataFrame:
+    """Feature-extract: a deterministic 16-dim feature vector derived
+    from the payload hash as PURE Column expressions — fully codegen'd
+    JVM, no Python workers, no fresh-Arrow allocation (a hash chain
+    never needed Python in the first place).
     """
-    if codec not in ("real", "fake"):
-        raise ValueError(f"unknown codec {codec!r}")
-
-    if codec == "real":
-
-        def compute(it):
-            for pdf in it:  # noqa: B007 — skeleton for a real decoder
-                raise NotImplementedError(
-                    "real media decoding needs PIL/torchaudio/ffmpeg — "
-                    "not available in this container; use codec='fake'"
-                )
-                yield pdf  # pragma: no cover — keeps this a generator
-
-        return df.select("media_id", "kind", "payload").mapInPandas(
-            compute, schema=FEATURES_SCHEMA
-        )
-
-    # fake codec, JVM-side. Hash the lowercase-hex rendering of the
-    # payload (not raw bytes): the chain stays inside valid UTF-8 so an
+    # Hash the lowercase-hex rendering of the payload (not raw
+    # bytes): the chain stays inside valid UTF-8 so an
     # ANSI-SQL oracle (sha256(lower(hex(payload)))) reproduces it
     # exactly. Feature i is the i-th LITTLE-ENDIAN uint16 of the digest
     # scaled to [0,1] — byte pair (2i, 2i+1) = hex chars (4i..4i+2,
@@ -147,7 +110,7 @@ def extract_features(df: DataFrame, codec: str = "fake") -> DataFrame:
 def features_fingerprint(features: pd.Series) -> pd.Series:
     """Stable scalar digest of a float feature vector (Arrow-batched).
 
-    Reconstructs the quantised uint16 lattice the fake codec emits
+    Reconstructs the quantised uint16 lattice extract_features emits
     (round(f * 65535)), renders it as lowercase hex, and sha256-hashes
     that string — so the digest is exact (no float-formatting drift)
     and an ANSI-SQL oracle can reproduce it. Lets array-valued feature
@@ -161,66 +124,10 @@ def features_fingerprint(features: pd.Series) -> pd.Series:
     return features.map(_fp)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", META_TYPE),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame, width: int, height: int, codec: str = "fake"
-) -> DataFrame:
-    """Resize image payloads via mapInPandas (Arrow-batched).
-
-    codec="real" is a stub (needs PIL — not in this container);
-    codec="fake" emits a deterministic payload of width*height//256
-    hash-cycled bytes with the metadata updated to the target size, so
-    the batch flow, binary round-trip, and metadata typing are real.
-    """
-    if codec not in ("real", "fake"):
-        raise ValueError(f"unknown codec {codec!r}")
-
-    def compute(it):
-        for pdf in it:
-            if codec == "real":
-                raise NotImplementedError(
-                    "real image resize needs PIL — use codec='fake'"
-                )
-            outs = []
-            size = max(width * height // 256, 16)
-            for payload in pdf["payload"]:
-                digest = hashlib.sha256(bytes(payload or b"")).digest()
-                reps = -(-size // len(digest))
-                outs.append((digest * reps)[:size])
-            meta = pd.DataFrame(
-                {
-                    "width": np.full(len(pdf), width, dtype=np.int32),
-                    "height": np.full(len(pdf), height, dtype=np.int32),
-                    "sample_rate": pdf["meta"].map(lambda m: m["sample_rate"]),
-                    "n_frames": pdf["meta"].map(lambda m: m["n_frames"]),
-                    "mime": pdf["meta"].map(lambda m: m["mime"]),
-                }
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "payload": outs,
-                    "meta": meta.to_dict("records"),
-                }
-            )
-
-    return df.filter(F.col("kind") == "image").select(
-        "media_id", "payload", "meta"
-    ).mapInPandas(compute, schema=RESIZED_SCHEMA)
-
-
 def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
     """Video frame-sampling plan: one row per sampled frame index —
-    pure Column math on metadata (the decode itself is the stubbed
-    step above). Demonstrates explode-based fan-out partitioning."""
+    pure Column math on metadata (no frame is decoded). Demonstrates
+    explode-based fan-out partitioning."""
     return (
         df.filter(F.col("kind") == "video")
         .select(

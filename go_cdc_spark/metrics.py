@@ -6,27 +6,36 @@ extended with the event-count/lag metrics the north_rule requires.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession, functions as F
 
 from go_cdc_spark.bookmark import BookmarkStore
+from go_cdc_spark.sources.oplog import list_segments
 
 
 def replication_lag(
     spark: SparkSession, log_dir: str, bookmarks: BookmarkStore
 ) -> dict:
     """Lag = max source position − max applied position (in events and
-    in log seconds)."""
-    src = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(log_dir)
-        .agg(
-            F.max(F.struct("ts_t", "ts_i", "seq")).alias("m"),
-            F.count("*").alias("n"),
+    in log seconds).
+
+    Segment numbering is monotone in (ts_t, ts_i, seq), so the newest
+    ``segment=K`` dir holds the source high-water mark: only that
+    segment's three position columns are scanned, whatever the log's
+    length. An empty log reports (0, 0, -1)."""
+    segments = list_segments(log_dir)
+    src_pos = (0, 0, -1)
+    if segments:
+        newest = os.path.join(log_dir, f"segment={segments[-1]}")
+        m = (
+            spark.read.parquet(newest)
+            .agg(F.max(F.struct("ts_t", "ts_i", "seq")).alias("m"))
+            .collect()[0]["m"]
         )
-        .collect()[0]
-    )
+        if m:
+            src_pos = (m["ts_t"], m["ts_i"], m["seq"])
     applied = bookmarks.latest_token()
-    src_pos = (src["m"]["ts_t"], src["m"]["ts_i"], src["m"]["seq"]) if src["m"] else (0, 0, -1)
     return {
         "source_hwm": src_pos,
         "applied_hwm": applied,

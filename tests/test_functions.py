@@ -17,7 +17,6 @@ from go_cdc_spark.functions.dedup import (
 from go_cdc_spark.functions.multimodal import (
     extract_features,
     frame_sample_plan,
-    resize_images,
     synthetic_media,
 )
 from go_cdc_spark.functions.similarity import (
@@ -177,7 +176,17 @@ def test_winnow_shared_substring_guarantee(spark):
     assert a == b
 
 
-def test_jaccard_dense_and_prefix_paths_agree(spark):
+def test_jaccard_dense_and_prefix_paths_agree(spark, monkeypatch):
+    """The dense-vocabulary regime (sharded block-pair GEMM) and the
+    AllPairs prefix filter return identical pairs, and neither collects
+    the corpus to the driver (the vocabulary collect — O(|vocab|) — is
+    the only driver state)."""
+    from pyspark.sql import DataFrame
+
+    def boom(self, *a, **k):
+        raise AssertionError("jaccard_pairs must not toPandas the corpus")
+
+    monkeypatch.setattr(DataFrame, "toPandas", boom)
     docs = spark.read.parquet(DOCS).limit(300)
     dense = {
         (r.doc_a, r.doc_b): r.jaccard
@@ -189,6 +198,50 @@ def test_jaccard_dense_and_prefix_paths_agree(spark):
         for r in jaccard_pairs(docs, threshold=0.7, dense_vocab_max=0).collect()
     }
     assert dense == prefix and len(dense) > 0
+
+
+def test_block_pairs_same_pairs_for_any_shard_count(spark):
+    """_block_pairs is exact whatever the shard grid: S = 1, 2 and 5
+    return identical pair sets for both measures, and an empty corpus
+    returns no rows. Its group labels get one shuffle partition each."""
+    from go_cdc_spark.functions.dedup import _jaccard_dense_blocked
+    from go_cdc_spark.functions.similarity import (
+        _near_dup_cosine_blocked,
+        _partition_labels,
+    )
+
+    labels = spark.createDataFrame([(v,) for v in _partition_labels(15)], "label long")
+    placed = labels.repartition(15, "label").select(F.spark_partition_id().alias("p"))
+    assert sorted(r.p for r in placed.collect()) == list(range(15))
+
+    docs = spark.read.parquet(DOCS).limit(300).cache()
+    emb = spark.read.parquet(EMB).cache()
+    vocab = sorted(
+        r.t for r in docs.select(
+            F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("t")
+        ).filter(F.length("t") > 0).distinct().collect()
+    )
+
+    def jac(d, s):
+        return {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in _jaccard_dense_blocked(d, vocab, 0.7, "text", "doc_id", s).collect()
+        }
+
+    def cos(e, s):
+        return {
+            (r.doc_a, r.doc_b): r.cos_sim
+            for r in _near_dup_cosine_blocked(e, 0.45, "vec_id", "embedding", s).collect()
+        }
+
+    for measure, corpus in ((jac, docs), (cos, emb)):
+        by_s = [measure(corpus, s) for s in (1, 2, 5)]
+        assert by_s[0] and by_s[0] == by_s[1] == by_s[2]
+        assert all(a < b for a, b in by_s[0])
+        assert measure(corpus.limit(0), 3) == {}
+    assert jaccard_pairs(docs.limit(0), threshold=0.7).count() == 0
+    docs.unpersist()
+    emb.unpersist()
 
 
 def test_kmeans_centroids_deterministic_and_normalized(spark):
@@ -230,7 +283,7 @@ def test_multimodal_plumbing(spark):
     media = synthetic_media(spark, 50)
     assert media.schema["meta"].dataType.fieldNames() == [
         "width", "height", "sample_rate", "n_frames", "mime"]
-    feats = extract_features(media, codec="fake").collect()
+    feats = extract_features(media).collect()
     assert len(feats) == 50
     assert all(len(r["features"]) == 16 for r in feats)
     # bit-exact parity with the reference chain the JVM columns replaced:
@@ -243,18 +296,12 @@ def test_multimodal_plumbing(spark):
         ref = np.frombuffer(digest, dtype="<u2").astype(np.float32) / np.float32(65535)
         assert np.array_equal(np.asarray(r["features"], dtype=np.float32), ref)
     # determinism
-    feats2 = extract_features(synthetic_media(spark, 50), codec="fake").collect()
+    feats2 = extract_features(synthetic_media(spark, 50)).collect()
     assert {r["media_id"]: r["payload_sha"] for r in feats} == {
         r["media_id"]: r["payload_sha"] for r in feats2
     }
-    with pytest.raises(Exception, match="NotImplementedError|real media"):
-        extract_features(media, codec="real").collect()
     plan = frame_sample_plan(media, every_n=30)
     assert plan.filter("frame_idx % 30 != 0").count() == 0
-    resized = resize_images(media, 64, 64, codec="fake").collect()
-    assert len(resized) == media.filter("kind = 'image'").count() > 0
-    assert all(r["meta"]["width"] == 64 and r["meta"]["height"] == 64 for r in resized)
-    assert all(len(bytes(r["payload"])) == 64 * 64 // 256 for r in resized)
 
 
 def test_minhash_lsh_recall_vs_exact_jaccard(spark):
@@ -389,32 +436,6 @@ def test_simhash_matches_bit_vote_oracle(spark):
     assert got == expect
 
 
-def test_jaccard_blocked_path_parity_no_driver_matrix(spark, monkeypatch):
-    """Above the doc-count gate, dense Jaccard must run the sharded
-    block-pair path: identical results AND no driver toPandas of the
-    corpus (vocab collect — O(|vocab|) — is the only driver state)."""
-    from pyspark.sql import DataFrame
-
-    docs = spark.read.parquet(DOCS).limit(300)
-    expect = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_pairs(docs, threshold=0.7).collect()
-    }
-    assert expect
-
-    def boom(self, *a, **k):
-        raise AssertionError("blocked path must not toPandas the corpus")
-
-    monkeypatch.setattr(DataFrame, "toPandas", boom)
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_pairs(
-            docs, threshold=0.7, dense_driver_max_docs=0, dense_shards=4
-        ).collect()
-    }
-    assert got == expect
-
-
 def test_cosine_blocked_path_parity_no_driver_collect(spark, monkeypatch):
     """Above max_broadcast_rows, near_dup_by_cosine must run the fully
     distributed block-pair path: identical pairs, no driver toPandas."""
@@ -433,9 +454,7 @@ def test_cosine_blocked_path_parity_no_driver_collect(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "toPandas", boom)
     got = {
         (r.doc_a, r.doc_b): r.cos_sim
-        for r in near_dup_by_cosine(
-            emb, threshold=0.45, max_broadcast_rows=0, n_shards=4
-        ).collect()
+        for r in near_dup_by_cosine(emb, threshold=0.45, max_broadcast_rows=0).collect()
     }
     assert got == expect
 

@@ -48,6 +48,36 @@ def test_full_replay_matches_oracle(spark, tmpdir_path):
     assert throughput_summary(bm)["events"] > 6_000  # includes duplicates
 
 
+def test_replication_lag_reads_only_the_newest_segment(spark, tmpdir_path, monkeypatch):
+    """The source high-water mark comes from the newest segment alone:
+    on a multi-segment log it equals the whole-log max, and the only
+    parquet path read is the last segment's. An empty log reports the
+    zero token."""
+    from pyspark.sql import DataFrameReader, functions as F
+
+    cfg = _cfg(tmpdir_path)
+    bm = BookmarkStore(cfg.bookmark_root, cfg.pipeline_id)
+    assert replication_lag(spark, cfg.source_log_path, bm)["source_hwm"] == (0, 0, -1)
+    spec = LogSpec(n_events=6_000, segment_events=1_500, dup_every=53, seed=21)
+    write_segments(spark, spec, cfg.source_log_path)
+    whole = (
+        spark.read.option("mergeSchema", "true").parquet(cfg.source_log_path)
+        .agg(F.max(F.struct("ts_t", "ts_i", "seq")).alias("m")).collect()[0]["m"]
+    )
+    read_paths = []
+    real_parquet = DataFrameReader.parquet
+
+    def recording(self, *paths, **kw):
+        read_paths.extend(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    lag = replication_lag(spark, cfg.source_log_path, bm)
+    assert lag["source_hwm"] == (whole["ts_t"], whole["ts_i"], whole["seq"])
+    assert not lag["caught_up"]
+    assert read_paths == [os.path.join(cfg.source_log_path, "segment=3")]
+
+
 def test_run_many_parallel_tables(spark, tmpdir_path):
     """≙ per-collection goroutines (oplog.go:176-198): two tables
     replayed concurrently from driver threads, disjoint state."""
