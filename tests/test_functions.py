@@ -436,6 +436,43 @@ def test_simhash_matches_bit_vote_oracle(spark):
     assert got == expect
 
 
+def test_jaccard_blocked_path_parity_no_driver_matrix(spark, monkeypatch):
+    """Dense Jaccard runs the sharded block-pair path: the same pairs as
+    the AllPairs prefix filter, at the default and at an explicit shard
+    count, AND no driver toPandas of the corpus (vocab collect —
+    O(|vocab|) — is the only driver state)."""
+    from pyspark.sql import DataFrame
+
+    from go_cdc_spark.functions.dedup import _jaccard_dense_blocked
+
+    docs = spark.read.parquet(DOCS).limit(300)
+    expect = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in jaccard_pairs(docs, threshold=0.7, dense_vocab_max=0).collect()
+    }
+    assert expect
+    vocab = sorted(
+        r.t for r in docs.select(
+            F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("t")
+        ).filter(F.length("t") > 0).distinct().collect()
+    )
+
+    def boom(self, *a, **k):
+        raise AssertionError("blocked path must not toPandas the corpus")
+
+    monkeypatch.setattr(DataFrame, "toPandas", boom)
+    got = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in jaccard_pairs(docs, threshold=0.7).collect()
+    }
+    assert got == expect
+    sharded = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in _jaccard_dense_blocked(docs, vocab, 0.7, "text", "doc_id", 4).collect()
+    }
+    assert sharded == expect
+
+
 def test_cosine_blocked_path_parity_no_driver_collect(spark, monkeypatch):
     """Above max_broadcast_rows, near_dup_by_cosine must run the fully
     distributed block-pair path: identical pairs, no driver toPandas."""
