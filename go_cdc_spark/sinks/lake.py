@@ -94,6 +94,26 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets))
 
 
+def key_buckets(
+    spark: SparkSession,
+    key_values: list[tuple],
+    key_fields: list[T.StructField],
+    n_buckets: int,
+) -> list[int]:
+    """The bucket of each key tuple, as :func:`bucket_expr` assigns it
+    to a row holding that key: xxhash64 over the key's literals cast to
+    the key fields' types (the hash depends on the type), folded to a
+    constant on a one-row range — no Python rows shipped to the JVM."""
+    hashed = [
+        F.pmod(
+            F.xxhash64(*[F.lit(v).cast(f.dataType) for f, v in zip(key_fields, k)]),
+            F.lit(n_buckets),
+        ).alias(f"b{i}")
+        for i, k in enumerate(key_values)
+    ]
+    return list(spark.range(0, 1, 1, 1).select(hashed).first())
+
+
 def prune_by_order_stats(
     pointers: dict[str, str],
     deltas: dict[str, list[str]],
@@ -989,8 +1009,8 @@ class ParquetLakeTable:
         """Point lookup: current live rows for an explicit list of keys.
 
         The serving-path read (≙ a replica point query): hash each
-        requested key to its bucket DRIVER-side (same xxhash64 the
-        writer used, evaluated on a tiny local DataFrame — no job
+        requested key to its bucket DRIVER-side (:func:`key_buckets`,
+        the same xxhash64 the writer used, constant-folded — no job
         against the table), then scan ONLY those buckets with the key
         predicate pushed into the parquet scan. I/O is O(requested
         buckets), not O(table): at 10k buckets a 5-key lookup touches
@@ -1003,14 +1023,10 @@ class ParquetLakeTable:
         if not key_values:
             raise ValueError("lookup needs at least one key tuple")
         by_name = {f.name: f for f in logical_schema(m).fields}
-        keys_df = self.spark.createDataFrame(
-            [tuple(k) for k in key_values],
-            schema=T.StructType([by_name[c] for c in key_cols]),
+        key_fields = [by_name[c] for c in key_cols]
+        buckets = sorted(  # ≤ len(keys)
+            set(key_buckets(self.spark, key_values, key_fields, m["n_buckets"]))
         )
-        wanted = keys_df.select(
-            bucket_expr(key_cols, m["n_buckets"]).alias("b")
-        ).distinct()
-        buckets = sorted(r["b"] for r in wanted.collect())  # ≤ len(keys)
         pred = None
         for k in key_values:
             eq = None

@@ -1,28 +1,29 @@
-"""Continuously-materialized per-key state via ``applyInPandasWithState``.
+"""Continuously-materialized per-key state over the oplog stream.
 
 The batch engine materializes state epoch-by-epoch: ``lww_resolve``
-reduces each chunk and the lake MERGE folds it into bucketed parquet
-(read amplification per epoch, state lives on disk). This module is
-the low-latency serving alternative the reference approximates with
-its always-on tailer loop (reference mongoreplay/tailer.go:75-121,
-single-threaded apply of each fetched batch): per-key LWW state lives
-in the *streaming state store* — hash-partitioned by key across
-executors, exactly one row per live key, checkpointed for
-exactly-once recovery — and each micro-batch emits only the keys it
-touched, already resolved.
+reduces each chunk and the lake MERGE folds it into bucketed parquet.
+This module is the always-on twin the reference approximates with its
+tailer loop (reference mongoreplay/tailer.go:75-121, single-threaded
+apply of each fetched batch), in two shapes:
 
-Scale shape (100 TB / 10^10 events): state is O(live keys), not
-O(events); each micro-batch shuffles only its own rows (one exchange
-on the key hash, the same partitioning every batch, so state-store
-locality is preserved); the Python worker sees one Arrow batch per
-updated key-group. No per-batch table rewrite, no compaction debt.
+- :func:`materialize_stream` keeps per-key LWW state in the
+  *streaming state store* via ``applyInPandasWithState`` —
+  hash-partitioned by key across executors, exactly one row per live
+  key, checkpointed for exactly-once recovery — and each micro-batch
+  emits only the keys it touched, already resolved, into a memory
+  table. State is O(live keys), not O(events); the Python worker sees
+  one Arrow batch per updated key-group.
+- :func:`materialize_stream_to_lake`, the durable production path, is
+  stateless: the lake table already IS a keyed LWW store (order-tuple
+  MERGE, tombstones kept across compaction), so each raw micro-batch
+  MERGEs straight into it. No state store, no per-key Python call.
 
-Semantic contract (reference parity, SURVEY §2.2): identical to the
-batch engine's LWW resolve — max ``(ts_t, ts_i, seq)`` wins per key,
-re-delivered/stale events lose the tuple compare and are dropped
-(duplicate-boundary tolerance), deletes are retained in state as
-tombstones so a late stale update cannot resurrect a deleted key
-(op set ≙ message.go:17-21).
+Semantic contract (reference parity, SURVEY §2.2), identical on both
+paths and to the batch engine's LWW resolve: max ``(ts_t, ts_i, seq)``
+wins per key, re-delivered/stale events lose the tuple compare and are
+dropped (duplicate-boundary tolerance), deletes are retained as
+tombstones so a late stale update cannot resurrect a deleted key (op
+set ≙ message.go:17-21), and rows with a NULL order value are dropped.
 """
 
 from __future__ import annotations
@@ -70,14 +71,13 @@ def materialize_stream(
 
     Sink caveat: ``format("memory")`` holds the full emission history
     on the driver — right for bounded availableNow runs and tests; an
-    always-on production deployment (``available_now=False``) uses
-    :func:`materialize_stream_to_lake`, the durable foreachBatch →
-    lake-MERGE twin — only the STATE STORE is O(live keys), the memory
-    sink is O(emissions). The checkpoint is keyed by (pipeline_id,
-    out_table): re-running with the same pair resumes the source and
-    skips already-committed files (sound only while the same
-    session's memory table survives); a fresh ``out_table`` gets a
-    fresh checkpoint and replays from the start.
+    always-on production deployment uses
+    :func:`materialize_stream_to_lake`, which MERGEs each raw
+    micro-batch into a bounded on-disk table instead. The checkpoint
+    is keyed by (pipeline_id, out_table): re-running with the same
+    pair resumes the source and skips already-committed files (sound
+    only while the same session's memory table survives); a fresh
+    ``out_table`` gets a fresh checkpoint and replays from the start.
 
     ``tombstone_ttl_ms`` bounds state held for DELETED keys: a
     tombstone that receives no further events for the TTL is evicted
@@ -97,41 +97,6 @@ def materialize_stream(
     loss: TTL eviction only matters on an always-on stream; a bounded
     run's state dies with the run.
     """
-    emitted = _emission_stream(
-        spark, cfg, stream_schema, max_files_per_trigger, tombstone_ttl_ms,
-        available_now,
-    )
-    writer = (
-        emitted.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(out_table)
-        .option(
-            "checkpointLocation",
-            f"{cfg.bookmark_root}/{cfg.pipeline_id}/"
-            f"_materialize_checkpoint/{out_table}",
-        )
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=cfg.trigger_interval or "1 second")
-    return writer.start()
-
-
-def _emission_stream(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    stream_schema: T.StructType | None,
-    max_files_per_trigger: int,
-    tombstone_ttl_ms: int | None,
-    available_now: bool,
-) -> DataFrame:
-    """The shared stateful core of both materializer sinks: the oplog
-    segment stream grouped by key through ``applyInPandasWithState``,
-    emitting one resolved (key, order, op, payload) row per key each
-    micro-batch touches. Sink-agnostic — :func:`materialize_stream`
-    writes it to a memory table, :func:`materialize_stream_to_lake`
-    MERGEs each batch into the parquet lake."""
     from go_cdc_spark.streaming.monitor import _read_source
 
     if tombstone_ttl_ms is not None and available_now:
@@ -210,9 +175,26 @@ def _emission_stream(
         if tombstone_ttl_ms is None
         else GroupStateTimeout.ProcessingTimeTimeout
     )
-    return reader.groupBy(*key_cols).applyInPandasWithState(
+    emitted = reader.groupBy(*key_cols).applyInPandasWithState(
         update, out_schema, state_schema, "update", timeout_conf
     )
+    writer = (
+        emitted.writeStream.outputMode("update")
+        .format("memory")
+        .queryName(out_table)
+        .option(
+            "checkpointLocation",
+            f"{cfg.bookmark_root}/{cfg.pipeline_id}/"
+            f"_materialize_checkpoint/{out_table}",
+        )
+    )
+    return _start(writer, cfg, available_now)
+
+
+def _start(writer, cfg: PipelineConfig, available_now: bool):
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=cfg.trigger_interval or "1 second").start()
 
 
 def materialize_stream_to_lake(
@@ -221,93 +203,78 @@ def materialize_stream_to_lake(
     stream_schema: T.StructType | None = None,
     max_files_per_trigger: int = 1,
     available_now: bool = True,
-    tombstone_ttl_ms: int | None = None,
     checkpoint_name: str = "lake",
     _fault_injector=None,
 ):
-    """Durable-sink twin of :func:`materialize_stream`: the same
-    stateful LWW resolve, but each micro-batch's emissions MERGE into
-    the :class:`~go_cdc_spark.sinks.lake.ParquetLakeTable` at
+    """Durable, stateless twin of :func:`materialize_stream`: each raw
+    micro-batch of the oplog segment stream MERGEs via ``foreachBatch``
+    into the :class:`~go_cdc_spark.sinks.lake.ParquetLakeTable` at
     ``cfg.table_root`` (which must exist — ``ParquetLakeTable.create``
-    it first, exactly like the batch replay path) via ``foreachBatch``.
-    This is the production path for an always-on materializer
-    (``available_now=False``, optionally ``tombstone_ttl_ms``): state
-    is O(live keys) in the checkpointed state store AND the serving
-    table is bounded on disk — no driver-resident emission history.
+    it first, exactly like the batch replay path). This is the
+    production path for an always-on materializer
+    (``available_now=False``).
+
+    The table is the state: ``apply_batch`` LWW-reduces the raw batch
+    and MERGEs it by order tuple, keeping tombstones (also across
+    compaction), so stale and re-delivered events lose and deletes
+    stay deleted — no state store, no per-key Python call. Rows with
+    a NULL order value are dropped before the MERGE. Deleted keys stay
+    as tombstone rows in the table; nothing evicts them.
 
     Exactly-once across kills/restarts, by composition of two
     idempotence layers:
 
     - the streaming checkpoint replays any micro-batch whose offsets
       committed but whose foreachBatch failed mid-apply (same
-      ``batch_id``, same emitted rows — the stateful operator's state
-      store versions with the batch);
+      ``batch_id``, same source files);
     - ``apply_batch(epoch_key=f"statemat-{pipeline}-{batch_id}")`` is
       an idempotent lake MERGE: a replayed batch whose manifest commit
       already landed is a no-op (epoch-key check), a batch that never
       committed applies atomically (os.link CAS manifest).
 
-    Emissions already carry op='d' tombstones, so deletes flow through
-    the same MERGE the batch engine uses; ``tombstone_ttl_ms`` only
-    evicts state-store rows and never touches the table.
-
-    ``_fault_injector`` (tests only): callable(batch_id) invoked before
+    ``_fault_injector`` (tests only): callable(batch_id) invoked after
     each batch's apply — raise from it to simulate a crash between the
     lake commit and the streaming commit log.
     """
     from go_cdc_spark.sinks.lake import ParquetLakeTable
+    from go_cdc_spark.streaming.monitor import _read_source
 
-    emitted = _emission_stream(
-        spark, cfg, stream_schema, max_files_per_trigger, tombstone_ttl_ms,
-        available_now,
-    )
+    schema = stream_schema or cfg.source_schema() or schemas.EVENT_SCHEMA
+    order_cols = list(cfg.order_cols)
+    events = _read_source(
+        spark.readStream.schema(schema).option(
+            "maxFilesPerTrigger", max_files_per_trigger
+        ),
+        cfg,
+    ).dropna(subset=order_cols)
     table_root = cfg.table_root
     pipeline_id = cfg.pipeline_id
-    order_cols = list(cfg.order_cols)
     salt = cfg.salt_partitions
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: apply_batch takes several actions over the batch and
-        # each would otherwise re-execute the stateful operator (the
-        # classic foreachBatch recompute trap — state must advance
-        # exactly once per batch)
+        # persist: apply_batch runs two actions over the batch (affected
+        # buckets, then the MERGE write); uncached, each re-scans the
+        # batch's files and the query progress counts every scan in
+        # numInputRows (2x the rows read)
         batch_df.persist()
         try:
-            # one resolved row per key — already the MERGE input shape
-            lake = ParquetLakeTable.load(batch_df.sparkSession, table_root)
-            stats = lake.apply_batch(
+            ParquetLakeTable.load(batch_df.sparkSession, table_root).apply_batch(
                 batch_df,
                 epoch_key=f"statemat-{pipeline_id}-{batch_id}",
                 order_cols=order_cols,
                 salt_partitions=salt,
             )
-            if not stats.applied:
-                # replayed batch whose lake commit already landed (we
-                # crashed between the lake commit and the streaming
-                # commit log): the MERGE is a no-op, but the batch must
-                # still be materialized so every state-store partition
-                # re-commits its version — Spark validates this
-                # (STATE_STORE_COMMIT_VALIDATION_FAILED otherwise)
-                batch_df.count()
             if _fault_injector is not None:
                 _fault_injector(batch_id)
         finally:
             batch_df.unpersist()
 
-    writer = (
-        emitted.writeStream.outputMode("update")
-        .foreachBatch(apply)
-        .option(
-            "checkpointLocation",
-            f"{cfg.bookmark_root}/{cfg.pipeline_id}/"
-            f"_materialize_checkpoint/{checkpoint_name}",
-        )
+    writer = events.writeStream.foreachBatch(apply).option(
+        "checkpointLocation",
+        f"{cfg.bookmark_root}/{cfg.pipeline_id}/"
+        f"_materialize_checkpoint/{checkpoint_name}",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=cfg.trigger_interval or "1 second")
-    return writer.start()
+    return _start(writer, cfg, available_now)
 
 
 def materialized_state(

@@ -775,6 +775,62 @@ def test_lookup_point_read_prunes_buckets(spark, tmpdir_path):
         t.lookup([])
 
 
+def test_key_buckets_match_bucket_expr_over_columns(spark):
+    """The driver-side key hash puts every key in the bucket the writer's
+    ``bucket_expr`` gives a row holding it: string, int and long key
+    parts (the hash depends on the type), a NULL part, several keys."""
+    from pyspark.sql import types as T
+
+    from go_cdc_spark.sinks.lake import bucket_expr, key_buckets
+
+    fields = [
+        T.StructField("s", T.StringType()),
+        T.StructField("i", T.IntegerType()),
+        T.StructField("l", T.LongType()),
+    ]
+    keys = [
+        ("a", 1, 1),
+        ("b", -7, 2**40),
+        ("", 0, -1),
+        (None, 3, 4),
+        ("c", None, None),
+        ("ünï", 2**31 - 1, -(2**63)),
+    ]
+    cols = [f.name for f in fields]
+    for n in (1, 7, 64):
+        want = [
+            r["b"]
+            for r in spark.createDataFrame(keys, T.StructType(fields))
+            .select(bucket_expr(cols, n).alias("b"))
+            .collect()
+        ]
+        assert key_buckets(spark, keys, fields, n) == want
+    # the int and long hashes of one value differ, so the cast matters
+    as_long = [T.StructField(f.name, T.LongType()) for f in fields[1:]]
+    assert key_buckets(spark, [(5, 5)], as_long, 1 << 20) != key_buckets(
+        spark, [(5, 5)], fields[1:], 1 << 20
+    )
+
+
+def test_lookup_ships_no_python_rows(spark, tmpdir_path, monkeypatch):
+    """``lookup`` hashes its keys without building a DataFrame from
+    Python rows."""
+    t = _table(spark, tmpdir_path, n_buckets=16)
+    t.apply_batch(
+        _resolved(spark, [_row("i", i, (f"r{i}", "p", "c"), f"v{i}") for i in range(20)]),
+        "e1",
+    )
+
+    def no_python_rows(*args, **kwargs):
+        raise AssertionError("lookup built a DataFrame from Python rows")
+
+    monkeypatch.setattr(spark, "createDataFrame", no_python_rows)
+    got = t.lookup([("r3", "p", "c"), ("r11", "p", "c"), ("r99", "p", "c")])
+    assert {(r["repo"], r["content"]) for r in got.collect()} == {
+        ("r3", "v3"), ("r11", "v11"),
+    }
+
+
 def test_compact_clustered_preserves_view_and_future_merges(spark, tmpdir_path):
     """compact(cluster_by=...) is pure layout: logical view, tombstones
     and later MERGEs are identical; the manifest gains per-file bounds

@@ -1,5 +1,6 @@
-"""Stateful streaming materializer (applyInPandasWithState):
-cross-micro-batch state correctness vs the sequential pandas oracle,
+"""Streaming materializers: the state-store path
+(applyInPandasWithState) and the stateless lake sink — cross-micro-batch
+state correctness vs the sequential pandas oracle and vs each other,
 and tombstone retention against stale re-delivered updates."""
 
 from __future__ import annotations
@@ -118,22 +119,27 @@ def test_stateful_null_order_rows_dropped_not_fatal(spark, tmpdir_path):
         materialize_stream(spark, cfg, "statemat_t4", stream_schema=bad)
 
 
+def _write_paced_segments(spark, log, segs, schema=schemas.EVENT_SCHEMA):
+    """One single-file segment per row list, modification times 60 s
+    apart, so with maxFilesPerTrigger=1 micro-batch i reads segment i."""
+    now = time.time()
+    for i, rows in enumerate(segs):
+        d = os.path.join(log, f"segment={i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(d)
+        for f in glob.glob(os.path.join(d, "*")):
+            os.utime(f, (now + 60 * i, now + 60 * i))
+
+
 def _write_ttl_segments(spark, log):
     """Three paced segments: tombstone k1, unrelated k2 (the batch
     whose processing fires k1's expired timer), then a STALE k1 update
     re-delivered after eviction."""
-    segs = [
+    _write_paced_segments(spark, log, [
         [("i", 1, 0, 1, "k1", "p", "c", "py", "v1"),
          ("d", 10, 0, 10, "k1", "p", "c", None, None)],
         [("i", 3, 0, 3, "k2", "p", "c", "py", "w1")],
         [("u", 5, 0, 5, "k1", "p", "c", "py", "stale")],
-    ]
-    now = time.time()
-    for i, rows in enumerate(segs):
-        d = os.path.join(log, f"segment={i}")
-        spark.createDataFrame(rows, schemas.EVENT_SCHEMA).coalesce(1).write.parquet(d)
-        for f in glob.glob(os.path.join(d, "*")):
-            os.utime(f, (now + 60 * i, now + 60 * i))
+    ])
 
 
 def test_tombstone_ttl_evicts_state_and_drops_shield(spark, tmpdir_path):
@@ -255,9 +261,9 @@ def _lake_create(spark, cfg):
 
 
 def test_materialize_to_lake_matches_oracle(spark, tmpdir_path):
-    """The durable-sink twin: foreachBatch MERGEs each micro-batch's
-    emissions into the lake; final table state must equal the
-    sequential pandas oracle (same contract as the memory-sink fold)."""
+    """The durable-sink twin: foreachBatch MERGEs each raw micro-batch
+    into the lake; final table state must equal the sequential pandas
+    oracle (same contract as the memory-sink fold)."""
     from go_cdc_spark.streaming.stateful import materialize_stream_to_lake
 
     cfg = _cfg(tmpdir_path, pipeline_id="statemat_lake")
@@ -318,3 +324,148 @@ def test_materialize_to_lake_kill_resume_exactly_once(spark, tmpdir_path):
     ]
     assert len(keys) == len(set(keys)) >= 2
     assert f"statemat-{cfg.pipeline_id}-1" in keys
+
+
+def _shuffled_segments(n_segments=4, per_segment=150, seed=3):
+    """Events whose arrival order is a shuffle of their order tuples
+    (out-of-order across and within segments, so stale updates and
+    deletes land after newer events), inserts/updates/deletes over 25
+    keys, and every 9th event of a segment re-delivered in the next."""
+    import random
+
+    rng = random.Random(seed)
+    orders = list(range(1, n_segments * per_segment + 1))
+    rng.shuffle(orders)
+    events = []
+    for t in orders:
+        k = rng.randrange(25)
+        op = rng.choices(["i", "u", "d"], weights=[3, 4, 2])[0]
+        lang, content = (None, None) if op == "d" else ("py", f"v{t}")
+        events.append((op, 1_700_000_000 + t // 10, t % 10, t, f"r{k}", "p", "c", lang, content))
+    segs = [events[i * per_segment:(i + 1) * per_segment] for i in range(n_segments)]
+    for i in range(1, n_segments):
+        segs[i] = segs[i] + segs[i - 1][::9]
+    return segs
+
+
+def _rows_written(root, version):
+    """Rows in the parquet files the commit of ``version`` wrote."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in glob.glob(os.path.join(root, "data", f"v{version}-*", "*", "*.parquet"))
+    )
+
+
+def test_lake_sink_matches_state_store_path(spark, tmpdir_path):
+    """The stateless lake sink against the state-store path it replaced:
+    one log with duplicates, out-of-order events and deletes, through
+    ``materialize_stream`` + ``materialized_state`` and through
+    ``materialize_stream_to_lake``. The final states are equal,
+    tombstones included, and each micro-batch writes as many rows to
+    the merge-on-read table as the state-store path emitted for it."""
+    from go_cdc_spark.sinks.lake import ParquetLakeTable
+    from go_cdc_spark.streaming.stateful import materialize_stream_to_lake
+
+    log = os.path.join(tmpdir_path, "log")
+    segs = _shuffled_segments()
+    _write_paced_segments(spark, log, segs)
+
+    def cfg(name):
+        return PipelineConfig(
+            pipeline_id=name,
+            source_log_path=log,
+            table_root=os.path.join(tmpdir_path, name, "table"),
+            bookmark_root=os.path.join(tmpdir_path, name, "bookmarks"),
+        )
+
+    cols = ["repo", "path", "commit", "ts_t", "ts_i", "seq", "op", "lang", "content"]
+
+    mem_cfg = cfg("statemat-eq-mem")
+    q = materialize_stream(spark, mem_cfg, "statemat_eq")
+    q.awaitTermination()
+    emitted = [p["sink"]["numOutputRows"] for p in q.recentProgress if p["numInputRows"]]
+    want = materialized_state(
+        spark, "statemat_eq", mem_cfg, ["lang", "content"], include_deletes=True
+    ).select(cols)
+
+    lake_cfg = cfg("statemat-eq-lake")
+    lake = ParquetLakeTable.create(
+        spark, lake_cfg.table_root, schemas.TABLE_SCHEMA, list(lake_cfg.key_cols), 8,
+        mode="mor", compact_every=len(segs) + 1,  # no compaction: a version holds one batch
+    )
+    q2 = materialize_stream_to_lake(spark, lake_cfg)
+    q2.awaitTermination()
+    progress = [p for p in q2.recentProgress if p["numInputRows"]]
+    got = lake.read(internal=True).select(cols)
+
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert {r["op"] for r in got.collect()} == {"i", "u", "d"}
+    assert len(emitted) == len(progress) == len(segs)
+    assert [_rows_written(lake_cfg.table_root, v) for v in range(1, len(segs) + 1)] == emitted
+    # every source row is read (and counted) once per micro-batch
+    assert sum(p["numInputRows"] for p in progress) == sum(len(s) for s in segs)
+
+
+def test_lake_sink_tombstone_survives_compaction(spark, tmpdir_path):
+    """A delete followed by a stale update in a later segment, MERGEd
+    into a merge-on-read table that compacts every second delta: the
+    stale update's batch compacts the deleted key's bucket, and the key
+    stays absent before, through and after that compaction."""
+    from pyspark.sql import functions as F
+
+    from go_cdc_spark.sinks.lake import ParquetLakeTable, bucket_expr
+    from go_cdc_spark.streaming.stateful import materialize_stream_to_lake
+
+    cfg = _cfg(tmpdir_path, pipeline_id="statemat-lake-tomb")
+    _write_ttl_segments(spark, cfg.source_log_path)
+    lake = ParquetLakeTable.create(
+        spark, cfg.table_root, schemas.TABLE_SCHEMA, list(cfg.key_cols), 8,
+        mode="mor", compact_every=2,
+    )
+    q = materialize_stream_to_lake(spark, cfg)
+    q.awaitTermination()
+
+    k1 = spark.createDataFrame([("k1", "p", "c")], "repo string, path string, commit string")
+    b1 = str(k1.select(bucket_expr(list(cfg.key_cols), 8).alias("b")).first()["b"])
+    m = lake.manifest()
+    assert m["version"] == 3
+    # the stale update's batch folded k1's bucket into a new base
+    assert b1 in lake.manifest_at(1)["deltas"] and b1 not in m["deltas"]
+    assert m["buckets"][b1] != lake.manifest_at(2)["buckets"].get(b1)
+    for v in (1, 2, 3):
+        live = lake.read(manifest=lake.manifest_at(v))
+        assert live.filter(F.col("repo") == "k1").count() == 0
+    tomb = lake.read(internal=True).filter(F.col("repo") == "k1").collect()
+    assert [(r["op"], r["seq"]) for r in tomb] == [("d", 10)]
+    assert [r["content"] for r in lake.read().collect()] == ["w1"]
+
+
+def test_lake_sink_never_writes_null_order_rows(spark, tmpdir_path):
+    """Rows with a NULL order value are dropped before the MERGE: they
+    are never written, and a key whose only event has one never
+    appears."""
+    from pyspark.sql import types as T
+
+    from go_cdc_spark.sinks.lake import ParquetLakeTable
+    from go_cdc_spark.streaming.stateful import materialize_stream_to_lake
+
+    nullable = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in schemas.EVENT_SCHEMA.fields]
+    )
+    cfg = _cfg(tmpdir_path, pipeline_id="statemat-lake-null")
+    rows = [
+        ("i", 1, 0, 1, "r1", "p1", "c1", "py", "good"),
+        ("u", None, 0, 9, "r1", "p1", "c1", "py", "bad"),  # null ts_t
+        ("u", 2, None, 9, "r9", "p9", "c9", "py", "only-null"),  # null ts_i
+    ]
+    _write_paced_segments(spark, cfg.source_log_path, [rows], nullable)
+    lake = ParquetLakeTable.create(
+        spark, cfg.table_root, schemas.TABLE_SCHEMA, list(cfg.key_cols), 8, mode="mor"
+    )
+    q = materialize_stream_to_lake(spark, cfg, stream_schema=nullable)
+    q.awaitTermination()
+    got = [(r["repo"], r["seq"], r["content"]) for r in lake.read(internal=True).collect()]
+    assert got == [("r1", 1, "good")]
+    assert _rows_written(cfg.table_root, 1) == 1
