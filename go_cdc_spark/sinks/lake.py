@@ -69,6 +69,7 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.types import _make_type_verifier
 
 from go_cdc_spark import schemas
 from go_cdc_spark.evolve import align_to_schema, union_schema
@@ -103,7 +104,13 @@ def key_buckets(
     """The bucket of each key tuple, as :func:`bucket_expr` assigns it
     to a row holding that key: xxhash64 over the key's literals cast to
     the key fields' types (the hash depends on the type), folded to a
-    constant on a one-row range — no Python rows shipped to the JVM."""
+    constant on a one-row range — no Python rows shipped to the JVM.
+    A value that does not have its key field's type raises ValueError:
+    the cast would coerce it (``'5'`` for an int key, an overflowing
+    int) and hash it to a bucket the writer never gave that key."""
+    for k in key_values:
+        for f, v in zip(key_fields, k):
+            _check_key_value(f, v)
     hashed = [
         F.pmod(
             F.xxhash64(*[F.lit(v).cast(f.dataType) for f, v in zip(key_fields, k)]),
@@ -112,6 +119,20 @@ def key_buckets(
         for i, k in enumerate(key_values)
     ]
     return list(spark.range(0, 1, 1, 1).select(hashed).first())
+
+
+def _check_key_value(f: T.StructField, v) -> None:
+    if v is None:
+        return
+    try:
+        if isinstance(f.dataType, T.StringType) and not isinstance(v, str):
+            raise TypeError(f"expected str, got {type(v).__name__}")
+        _make_type_verifier(f.dataType, name=f.name)(v)
+    except (TypeError, ValueError) as e:
+        raise ValueError(
+            f"key value {v!r} does not fit key column {f.name!r} "
+            f"({f.dataType.simpleString()}): {e}"
+        ) from None
 
 
 def prune_by_order_stats(

@@ -96,6 +96,7 @@ def stream_windowed_rates(
     """
     from go_cdc_spark.evolve import union_schema
     from go_cdc_spark.sinks.lake import ParquetLakeTable
+    from go_cdc_spark.streaming.replay import _start
 
     try:
         table_schema = ParquetLakeTable.load(spark, cfg.table_root).schema
@@ -128,11 +129,7 @@ def stream_windowed_rates(
             f"{cfg.bookmark_root}/{cfg.pipeline_id}/_monitor_checkpoint",
         )
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=cfg.trigger_interval or "1 second")
-    return writer.start()
+    return _start(writer, cfg, available_now)
 
 
 def stream_dedup_events(

@@ -13,7 +13,9 @@ bookmark):
   ``maxFilesPerTrigger`` (≙ FetchCountThreshold, tailer.go:35) and
   ``Trigger.AvailableNow`` / processingTime (≙ the 1 s tickers,
   tailer.go:100); ``foreachBatch`` bodies are idempotent on the
-  streaming epoch id, so checkpoint replays after a crash no-op.
+  streaming epoch id, so checkpoint replays after a crash no-op. The
+  stateless lake materializer (``stateful.materialize_stream_to_lake``)
+  is this path under its own checkpoint and epoch-key prefix.
 
 Where the reference drops events when its ring buffer is full
 (tailer_manager.go:106-109 — a data-loss bug, SURVEY §2.2-5), Spark's
@@ -174,18 +176,47 @@ def _source_schema(cfg: PipelineConfig, lake: ParquetLakeTable):
     return cfg.source_schema() or union_schema(schemas.EVENT_SCHEMA, lake.schema)
 
 
+def check_stream_schema(schema, cfg: PipelineConfig) -> None:
+    """Fail at start, not inside the first micro-batch, when the stream
+    schema lacks a key, order or ``op`` column."""
+    names = set(schema.fieldNames())
+    missing = [c for c in (*cfg.key_cols, *cfg.order_cols, "op") if c not in names]
+    if missing:
+        raise ValueError(f"stream schema lacks required columns {missing}")
+
+
+def _start(writer, cfg: PipelineConfig, available_now: bool):
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=cfg.trigger_interval or "1 second").start()
+
+
 def replay_streaming(
     spark: SparkSession,
     cfg: PipelineConfig,
     max_files_per_trigger: int = 1,
     available_now: bool = True,
+    stream_schema=None,
+    epoch_prefix: str = "stream",
+    checkpoint_name: str = "_checkpoint",
+    _fault_injector=None,
 ):
     """Structured Streaming tail over the segment directory.
 
-    Returns the StreamingQuery (caller awaits/stops). Late/replayed
-    micro-batches are deduped by epoch-keyed idempotent commits.
+    Returns the StreamingQuery (caller awaits/stops). Each micro-batch
+    runs :func:`apply_epoch` under ``epoch_key=f"{epoch_prefix}-
+    {pipeline}-{batch_id}"``: the source checkpoint replays a batch
+    whose apply did not reach the commit log, and the epoch key makes
+    the re-apply of an already-committed batch a no-op — exactly-once
+    across kills. Rows with a NULL order value are dropped before the
+    MERGE (they cannot take part in the order-tuple compare).
+
+    ``_fault_injector`` (tests only): callable(batch_id) invoked after
+    each batch's apply — raise from it to simulate a crash between the
+    lake commit and the streaming commit log.
     """
     from go_cdc_spark.evolve import union_schema
+    from go_cdc_spark.streaming.monitor import _read_source
 
     lake = ParquetLakeTable.load(spark, cfg.table_root)
     bookmarks = BookmarkStore(cfg.bookmark_root, cfg.pipeline_id)
@@ -193,37 +224,43 @@ def replay_streaming(
     # Streaming needs a fixed schema: the union of event schema and the
     # table's payload (covers already-evolved columns; parquet fills
     # missing columns with null).
-    stream_schema = (
-        cfg.source_schema() or union_schema(schemas.EVENT_SCHEMA, lake.schema)
+    schema = (
+        stream_schema
+        or cfg.source_schema()
+        or union_schema(schemas.EVENT_SCHEMA, lake.schema)
     )
-    from go_cdc_spark.streaming.monitor import _read_source
-
+    check_stream_schema(schema, cfg)
     reader = _read_source(
-        spark.readStream.schema(stream_schema).option(
+        spark.readStream.schema(schema).option(
             "maxFilesPerTrigger", max_files_per_trigger
         ),
         cfg,
-    )
+    ).dropna(subset=list(cfg.order_cols))
 
     def body(batch_df: DataFrame, epoch_id: int):
-        apply_epoch(
-            batch_df,
-            lake,
-            bookmarks,
-            cfg,
-            epoch=int(epoch_id),
-            epoch_key=f"stream-{cfg.pipeline_id}-{epoch_id}",
-        )
+        # persist: apply_epoch runs two actions over the batch (lineage
+        # pass, then the MERGE); uncached, each re-scans the batch's
+        # files and the query progress counts both scans in numInputRows
+        batch_df.persist()
+        try:
+            apply_epoch(
+                batch_df,
+                lake,
+                bookmarks,
+                cfg,
+                epoch=int(epoch_id),
+                epoch_key=f"{epoch_prefix}-{cfg.pipeline_id}-{epoch_id}",
+            )
+        finally:
+            batch_df.unpersist()
+        if _fault_injector is not None:
+            _fault_injector(epoch_id)
 
-    writer = (
-        reader.writeStream.foreachBatch(body)
-        .option("checkpointLocation", f"{cfg.bookmark_root}/{cfg.pipeline_id}/_checkpoint")
+    writer = reader.writeStream.foreachBatch(body).option(
+        "checkpointLocation",
+        f"{cfg.bookmark_root}/{cfg.pipeline_id}/{checkpoint_name}",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=cfg.trigger_interval or "1 second")
-    return writer.start()
+    return _start(writer, cfg, available_now)
 
 
 def run_many(

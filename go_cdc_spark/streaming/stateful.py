@@ -15,8 +15,10 @@ apply of each fetched batch), in two shapes:
   one Arrow batch per updated key-group.
 - :func:`materialize_stream_to_lake`, the durable production path, is
   stateless: the lake table already IS a keyed LWW store (order-tuple
-  MERGE, tombstones kept across compaction), so each raw micro-batch
-  MERGEs straight into it. No state store, no per-key Python call.
+  MERGE, tombstones kept across compaction), so it is the streaming
+  replay (``replay_streaming``) under its own checkpoint and epoch-key
+  prefix — each raw micro-batch MERGEs straight into the table. No
+  state store, no per-key Python call.
 
 Semantic contract (reference parity, SURVEY §2.2), identical on both
 paths and to the batch engine's LWW resolve: max ``(ts_t, ts_i, seq)``
@@ -35,14 +37,13 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 
 from go_cdc_spark import schemas
 from go_cdc_spark.config import PipelineConfig
+from go_cdc_spark.streaming.replay import _start, check_stream_schema, replay_streaming
 
 
 def _split_schema(schema: T.StructType, cfg: PipelineConfig):
     """(key fields, order fields, payload fields) in declaration order."""
+    check_stream_schema(schema, cfg)
     by_name = {f.name: f for f in schema.fields}
-    missing = [c for c in list(cfg.key_cols) + list(cfg.order_cols) + ["op"] if c not in by_name]
-    if missing:
-        raise ValueError(f"stream schema lacks required columns {missing}")
     reserved = set(cfg.key_cols) | set(cfg.order_cols) | {"op"}
     payload = [f.name for f in schema.fields if f.name not in reserved]
     return (
@@ -191,12 +192,6 @@ def materialize_stream(
     return _start(writer, cfg, available_now)
 
 
-def _start(writer, cfg: PipelineConfig, available_now: bool):
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime=cfg.trigger_interval or "1 second").start()
-
-
 def materialize_stream_to_lake(
     spark: SparkSession,
     cfg: PipelineConfig,
@@ -206,75 +201,35 @@ def materialize_stream_to_lake(
     checkpoint_name: str = "lake",
     _fault_injector=None,
 ):
-    """Durable, stateless twin of :func:`materialize_stream`: each raw
-    micro-batch of the oplog segment stream MERGEs via ``foreachBatch``
-    into the :class:`~go_cdc_spark.sinks.lake.ParquetLakeTable` at
+    """Durable, stateless twin of :func:`materialize_stream`: the
+    streaming replay (:func:`~go_cdc_spark.streaming.replay.
+    replay_streaming`) into the
+    :class:`~go_cdc_spark.sinks.lake.ParquetLakeTable` at
     ``cfg.table_root`` (which must exist — ``ParquetLakeTable.create``
-    it first, exactly like the batch replay path). This is the
+    it first), with its own checkpoint and
+    ``epoch_key=f"statemat-{pipeline}-{batch_id}"``. This is the
     production path for an always-on materializer
     (``available_now=False``).
 
-    The table is the state: ``apply_batch`` LWW-reduces the raw batch
-    and MERGEs it by order tuple, keeping tombstones (also across
-    compaction), so stale and re-delivered events lose and deletes
-    stay deleted — no state store, no per-key Python call. Rows with
-    a NULL order value are dropped before the MERGE. Deleted keys stay
-    as tombstone rows in the table; nothing evicts them.
-
-    Exactly-once across kills/restarts, by composition of two
-    idempotence layers:
-
-    - the streaming checkpoint replays any micro-batch whose offsets
-      committed but whose foreachBatch failed mid-apply (same
-      ``batch_id``, same source files);
-    - ``apply_batch(epoch_key=f"statemat-{pipeline}-{batch_id}")`` is
-      an idempotent lake MERGE: a replayed batch whose manifest commit
-      already landed is a no-op (epoch-key check), a batch that never
-      committed applies atomically (os.link CAS manifest).
-
-    ``_fault_injector`` (tests only): callable(batch_id) invoked after
-    each batch's apply — raise from it to simulate a crash between the
-    lake commit and the streaming commit log.
+    The table is the state: each raw micro-batch goes through
+    ``apply_epoch`` (op validation, LWW reduce, order-tuple MERGE,
+    tombstones kept also across compaction), so stale and re-delivered
+    events lose and deletes stay deleted — no state store, no per-key
+    Python call. Rows with a NULL order value are dropped before the
+    MERGE. Deleted keys stay as tombstone rows; nothing evicts them.
+    Exactly-once across kills composes the source checkpoint with the
+    epoch key (a replayed batch whose lake commit landed is a no-op).
     """
-    from go_cdc_spark.sinks.lake import ParquetLakeTable
-    from go_cdc_spark.streaming.monitor import _read_source
-
-    schema = stream_schema or cfg.source_schema() or schemas.EVENT_SCHEMA
-    order_cols = list(cfg.order_cols)
-    events = _read_source(
-        spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", max_files_per_trigger
-        ),
+    return replay_streaming(
+        spark,
         cfg,
-    ).dropna(subset=order_cols)
-    table_root = cfg.table_root
-    pipeline_id = cfg.pipeline_id
-    salt = cfg.salt_partitions
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: apply_batch runs two actions over the batch (affected
-        # buckets, then the MERGE write); uncached, each re-scans the
-        # batch's files and the query progress counts every scan in
-        # numInputRows (2x the rows read)
-        batch_df.persist()
-        try:
-            ParquetLakeTable.load(batch_df.sparkSession, table_root).apply_batch(
-                batch_df,
-                epoch_key=f"statemat-{pipeline_id}-{batch_id}",
-                order_cols=order_cols,
-                salt_partitions=salt,
-            )
-            if _fault_injector is not None:
-                _fault_injector(batch_id)
-        finally:
-            batch_df.unpersist()
-
-    writer = events.writeStream.foreachBatch(apply).option(
-        "checkpointLocation",
-        f"{cfg.bookmark_root}/{cfg.pipeline_id}/"
-        f"_materialize_checkpoint/{checkpoint_name}",
+        max_files_per_trigger,
+        available_now,
+        stream_schema=stream_schema,
+        epoch_prefix="statemat",
+        checkpoint_name=f"_materialize_checkpoint/{checkpoint_name}",
+        _fault_injector=_fault_injector,
     )
-    return _start(writer, cfg, available_now)
 
 
 def materialized_state(

@@ -831,6 +831,24 @@ def test_lookup_ships_no_python_rows(spark, tmpdir_path, monkeypatch):
     }
 
 
+def test_key_buckets_reject_mistyped_values(spark, tmpdir_path):
+    """A key value of the wrong type raises instead of being cast to the
+    key type and hashed to some bucket: a string for an int key, an int
+    for a string key, a bool, an int out of the key type's range."""
+    import pytest
+    from pyspark.sql import types as T
+
+    from go_cdc_spark.sinks.lake import key_buckets
+
+    fields = [T.StructField("s", T.StringType()), T.StructField("i", T.IntegerType())]
+    for bad in [("a", "5"), (5, 5), ("a", True), ("a", 2**31), ("a", 1.0)]:
+        with pytest.raises(ValueError, match="does not fit key column"):
+            key_buckets(spark, [("ok", 1), bad], fields, 8)
+    t = _table(spark, tmpdir_path, n_buckets=16)
+    with pytest.raises(ValueError, match="'repo'"):
+        t.lookup([(3, "p", "c")])
+
+
 def test_compact_clustered_preserves_view_and_future_merges(spark, tmpdir_path):
     """compact(cluster_by=...) is pure layout: logical view, tombstones
     and later MERGEs are identical; the manifest gains per-file bounds

@@ -232,6 +232,9 @@ def test_streaming_replay_matches_oracle(spark, tmpdir_path):
     q.awaitTermination(120)
     lake = ParquetLakeTable.load(spark, cfg.table_root)
     assert _fingerprint(lake) == _oracle_fp(spark, cfg.source_log_path)
+    # every source row is read (and counted) once per micro-batch
+    n_rows = spark.read.parquet(cfg.source_log_path).count()
+    assert sum(p["numInputRows"] for p in q.recentProgress) == n_rows
 
 
 def test_streaming_kill_then_resume_from_checkpoint(spark, tmpdir_path):

@@ -469,3 +469,37 @@ def test_lake_sink_never_writes_null_order_rows(spark, tmpdir_path):
     got = [(r["repo"], r["seq"], r["content"]) for r in lake.read(internal=True).collect()]
     assert got == [("r1", 1, "good")]
     assert _rows_written(cfg.table_root, 1) == 1
+
+
+def test_lake_sink_rejects_schema_without_op_at_start(spark, tmpdir_path):
+    """A stream schema that lacks ``op`` (or a key or order column) is
+    rejected when the query is started, not inside its first batch."""
+    from pyspark.sql import types as T
+
+    from go_cdc_spark.streaming.stateful import materialize_stream_to_lake
+
+    cfg = _cfg(tmpdir_path, pipeline_id="statemat-lake-noop")
+    _lake_create(spark, cfg)
+    no_op = T.StructType([f for f in schemas.EVENT_SCHEMA.fields if f.name != "op"])
+    with pytest.raises(ValueError, match=r"lacks required columns \['op'\]"):
+        materialize_stream_to_lake(spark, cfg, stream_schema=no_op)
+    assert not os.path.exists(
+        os.path.join(cfg.bookmark_root, cfg.pipeline_id, "_materialize_checkpoint")
+    )
+
+
+def test_lake_sink_rejects_unknown_op(spark, tmpdir_path):
+    """An event whose op is not i/u/d fails its micro-batch instead of
+    being written into the table."""
+    from go_cdc_spark.sinks.lake import ParquetLakeTable
+    from go_cdc_spark.streaming.stateful import materialize_stream_to_lake
+
+    cfg = _cfg(tmpdir_path, pipeline_id="statemat-lake-badop")
+    _write_paced_segments(spark, cfg.source_log_path, [
+        [("i", 1, 0, 1, "r1", "p", "c", "py", "ok"), ("x", 2, 0, 2, "r2", "p", "c", "py", "bad")],
+    ])
+    _lake_create(spark, cfg)
+    q = materialize_stream_to_lake(spark, cfg)
+    with pytest.raises(Exception, match="unknown op: x"):
+        q.awaitTermination()
+    assert ParquetLakeTable.load(spark, cfg.table_root).latest_version() == 0
