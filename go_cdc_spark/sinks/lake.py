@@ -27,6 +27,11 @@ buckets an epoch touches; merge-on-read appends the epoch's reduced
 batch as per-bucket delta files (manifest ``deltas``) and LWW-folds
 base+deltas at read, compacting a bucket after ``compact_every``
 deltas — O(batch) bytes written per epoch, the ingest-throughput mode.
+Either mode writes an epoch through ONE LWW reduce: the batch unioned
+with the raw, unfolded base + delta rows of the buckets it rewrites; a
+delta-only bucket brings no stored rows, so its batch rows leave the
+reduce one row per key. One shuffle for the merge, one for the write,
+whose tasks are capped at the core count.
 ``vacuum()`` reclaims superseded bucket copies (≙ expire_snapshots).
 
 - The key space is hash-partitioned into ``n_buckets`` buckets
@@ -491,7 +496,30 @@ class ParquetLakeTable:
         logical = logical_schema(m)
         order_cols = m.get("order_cols", schemas.ORDER_COLS)
         key_cols = m["key_cols"]
-        schema = internal_schema(logical, key_cols, order_cols)
+        out, has_deltas = self._scan(
+            m, internal_schema(logical, key_cols, order_cols), buckets,
+            changed_after, prune_ranges,
+        )
+        if has_deltas:  # fold deltas: newest event per key wins
+            payload = [f.name for f in logical.fields if f.name not in key_cols]
+            out = lww_resolve(out, key_cols, order_cols, payload, validate=False)
+        if internal:
+            return out
+        return out.filter(
+            F.coalesce(F.col("op"), F.lit("")) != schemas.DELETE_OP
+        ).select(*[f.name for f in logical.fields])
+
+    def _scan(
+        self,
+        m: dict,
+        schema: T.StructType,
+        buckets: list[int] | None = None,
+        changed_after: tuple[int, int, int] | None = None,
+        prune_ranges: dict[str, tuple] | None = None,
+    ) -> tuple[DataFrame, bool]:
+        """One parquet scan under ``schema`` of the base and delta files
+        :meth:`read` selects, unfolded (a key appears once per file that
+        holds it), and whether it covers a delta file, i.e. needs the fold."""
         wanted = {str(b) for b in buckets} if buckets is not None else None
         pointers = m["buckets"]
         deltas = m.get("deltas", {})
@@ -523,19 +551,9 @@ class ParquetLakeTable:
         if paths:
             out = self.spark.read.schema(schema).parquet(*paths)
         else:
-            out = self.spark.createDataFrame([], schema=schema)
-        if any(deltas.values()):  # fold deltas: newest event per key wins
-            payload = [
-                f.name for f in logical.fields if f.name not in set(key_cols)
-            ]
-            out = lww_resolve(
-                out, key_cols, order_cols, payload, validate=False
-            )
-        if internal:
-            return out
-        return out.filter(
-            F.coalesce(F.col("op"), F.lit("")) != schemas.DELETE_OP
-        ).select(*[f.name for f in logical.fields])
+            # limit(0): an empty relation the optimizer drops from a union
+            out = self.spark.createDataFrame([], schema=schema).limit(0)
+        return out, any(deltas.values())
 
     def changes_between(self, m_old: dict, m_new: dict) -> DataFrame:
         """Change-data-feed read: the net row-level changes between two
@@ -637,6 +655,13 @@ class ParquetLakeTable:
         only) per-file bounds of the cluster columns. The commit passes
         the two stats maps on to :meth:`_write_manifest`.
 
+        Tasks: ``min(n_files_hint × files_per_bucket, defaultParallelism)``
+        (at least ``files_per_bucket``), one wave on the cores. A row goes
+        to task ``(bucket × files_per_bucket + key slot) mod tasks``: a
+        bucket's slots are consecutive ids, so each lands in its own task
+        and a bucket gets exactly one file per non-empty slot, whatever
+        the cap; several buckets may share a task.
+
         ``cluster_by`` (compaction only) range-clusters each bucket's
         rows into ~``cluster_files`` files by the given columns (ntile
         bins over the per-bucket sort the rewrite pays anyway), so the
@@ -702,16 +727,18 @@ class ParquetLakeTable:
                 .sortWithinPartitions("bucket", *cluster_by)
             )
         else:
-            part_cols = [F.col("bucket")]
+            part_id = F.col("bucket") * fpb
             if fpb > 1:
-                part_cols.append(
-                    F.pmod(
-                        F.xxhash64(*[F.col(c) for c in m["key_cols"]]), F.lit(fpb)
-                    )
+                # murmur3, not bucket_expr's xxhash64, whose slot would be
+                # a function of the bucket when fpb divides n_buckets
+                part_id += F.pmod(
+                    F.hash(*[F.col(c) for c in m["key_cols"]]), F.lit(fpb)
                 )
-            staged = df.repartition(
-                max(n_files_hint * fpb, 1), *part_cols
-            ).sortWithinPartitions("bucket")
+            n_parts = max(
+                fpb, min(n_files_hint * fpb, self.spark.sparkContext.defaultParallelism)
+            )
+            staged = df.repartitionById(n_parts, part_id.cast("int"))
+            staged = staged.sortWithinPartitions("bucket")
         try:
             staged.write.partitionBy("bucket").mode("overwrite").parquet(out_dir)
         finally:
@@ -1200,12 +1227,16 @@ class ParquetLakeTable:
         """MERGE one batch of change events (raw or pre-reduced; the
         merge reduce collapses either — max-struct associativity).
 
-        Copy-on-write rewrites affected buckets only; merge-on-read
-        appends reduced deltas. Exactly-once via the epoch check +
-        atomic manifest rename. Pass ``affected`` (the batch's distinct
-        bucket ids) when the caller already computed them — saves one
-        job per epoch. ``salt_partitions`` → two-phase reduce for
-        pathological hot keys.
+        Copy-on-write rewrites the affected buckets; merge-on-read
+        appends reduced deltas and rewrites a bucket whose delta chain
+        would reach ``compact_every``. Both go through ONE LWW reduce
+        (map-side partial kept) of the batch unioned with the raw,
+        unfolded scan of the rewritten buckets' base + delta files.
+        Exactly-once via the epoch check + atomic manifest rename. Pass
+        ``affected`` (the batch's distinct bucket ids) when the caller
+        already computed them — saves one job per epoch.
+        ``salt_partitions`` → two-phase reduce for pathological hot
+        keys.
 
         ``manifest`` is the snapshot the caller derived the batch's
         ``bucket`` column (and ``affected``) from; the commit lands on
@@ -1254,7 +1285,6 @@ class ParquetLakeTable:
             )
             return CommitStats(version, epoch_key, True)
 
-        phys = internal_schema(new_schema, key_cols, order_cols)
         for f in new_schema.fields:  # null-pad payload cols the batch lacks
             if f.name not in batch.columns:
                 batch = batch.withColumn(f.name, F.lit(None).cast(f.dataType))
@@ -1270,82 +1300,44 @@ class ParquetLakeTable:
         bucket_counts = dict(m["bucket_counts"])
         deltas = {b: list(ds) for b, ds in m.get("deltas", {}).items()}
         delta_counts = dict(m.get("delta_counts", {}))
-        mode = m.get("mode", "cow")
-
-        if mode == "mor":
-            # Buckets that would exceed the delta budget get compacted
-            # (base+deltas+batch folded into a new base); the rest just
-            # append the batch rows as a delta — O(batch) bytes written.
+        if m.get("mode", "cow") == "mor":
+            # buckets that would exceed the delta budget get a new base;
+            # the rest append the batch's rows as one more delta
             budget = int(m.get("compact_every", 8))
-            to_compact = [
+            rewrite = {
                 b for b in affected if len(deltas.get(str(b), [])) + 1 >= budget
-            ]
-            delta_only = sorted(set(affected) - set(to_compact))
-            pieces = []
-            if to_compact:
-                cur = self.read(buckets=to_compact, manifest=m, internal=True)
-                sub = batch.filter(F.col("bucket").isin(to_compact)).drop("bucket")
-                pieces.append(
-                    merge_resolved(
-                        align_to_schema(cur, phys), sub, key_cols, order_cols,
-                        payload, salt_partitions,
-                    )
-                )
-            if delta_only:
-                # deltas store the batch REDUCED (one row per key): the
-                # batch may be raw events, and read-side amplification
-                # should be bounded by keys, not raw event volume
-                sub = align_to_schema(
-                    batch.filter(F.col("bucket").isin(delta_only)), phys
-                )
-                pieces.append(
-                    lww_resolve(
-                        sub, key_cols, order_cols, payload,
-                        salt_partitions=salt_partitions, validate=False,
-                    )
-                )
-            out = pieces[0]
-            for p in pieces[1:]:
-                out = out.unionByName(p)
-            out = out.withColumn("bucket", bucket_expr(key_cols, n_buckets))
-            counts, order_stats, file_stats = self._write_version_data(
-                out, m, data_dir, len(affected)
-            )
-            for b in to_compact:
-                bs = str(b)
-                deltas.pop(bs, None)
-                delta_counts.pop(bs, None)
+            }
+        else:
+            rewrite = set(affected)
+        # One LWW reduce writes every bucket: the raw base + delta rows of
+        # the rewritten buckets (unfolded — the reduce folds them) unioned
+        # with the batch. A delta-only bucket has no current rows here,
+        # so the same reduce leaves its batch rows one row per key.
+        current, _ = self._scan(
+            m, internal_schema(new_schema, key_cols, order_cols), rewrite
+        )
+        out = merge_resolved(
+            current, batch.drop("bucket"), key_cols, order_cols, payload,
+            salt_partitions,
+        ).withColumn("bucket", bucket_expr(key_cols, n_buckets))
+        counts, order_stats, file_stats = self._write_version_data(
+            out, m, data_dir, len(affected)
+        )
+        for b in affected:
+            bs = str(b)
+            if b not in rewrite:
                 if b in counts:
-                    buckets[bs] = data_dir
-                    bucket_counts[bs] = counts[b]
-                else:
-                    buckets.pop(bs, None)
-                    bucket_counts.pop(bs, None)
-            for b in delta_only:
-                if b in counts:
-                    bs = str(b)
                     deltas.setdefault(bs, []).append(data_dir)
                     delta_counts[bs] = delta_counts.get(bs, 0) + counts[b]
-        else:
-            current = self.read(buckets=affected, manifest=m, internal=True)
-            merged = merge_resolved(
-                align_to_schema(current, phys),
-                batch.drop("bucket"),
-                key_cols,
-                order_cols,
-                payload,
-                salt_partitions,
-            ).withColumn("bucket", bucket_expr(key_cols, n_buckets))
-            counts, order_stats, file_stats = self._write_version_data(
-                merged, m, data_dir, len(affected)
-            )
-            for b in affected:
-                if b in counts:
-                    buckets[str(b)] = data_dir
-                    bucket_counts[str(b)] = counts[b]
-                else:  # bucket fully deleted by this batch
-                    buckets.pop(str(b), None)
-                    bucket_counts.pop(str(b), None)
+                continue
+            deltas.pop(bs, None)
+            delta_counts.pop(bs, None)
+            if b in counts:
+                buckets[bs] = data_dir
+                bucket_counts[bs] = counts[b]
+            else:  # no rows left in the bucket
+                buckets.pop(bs, None)
+                bucket_counts.pop(bs, None)
 
         self._write_manifest(
             {

@@ -17,8 +17,9 @@ import os
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
+from go_cdc_spark.evolve import union_schema
 from go_cdc_spark.operators.resolve import apply_filters, from_token
 
 _SEG_RE = re.compile(r"^segment=(\d+)$")
@@ -51,6 +52,24 @@ def plan_chunks(segments: list[int], chunk_segments: int = 1) -> list[Chunk]:
     return chunks
 
 
+def _footer_schema(dirs: list[str]) -> T.StructType:
+    """Union of the parquet footer schemas of the data files in
+    ``dirs``, in dir then file-name order: driver-side pyarrow footer
+    reads, no Spark job. Skips the files Spark's reader skips (names
+    starting with ``_`` or ``.``: ``_SUCCESS``, checksums)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = T.StructType([])
+    for d in dirs:
+        for name in sorted(os.listdir(d)):
+            path = os.path.join(d, name)
+            if name.startswith(("_", ".")) or not os.path.isfile(path):
+                continue
+            schema = union_schema(schema, from_arrow_schema(pq.read_schema(path)))
+    return schema
+
+
 def read_chunk(
     spark: SparkSession,
     log_dir: str,
@@ -60,8 +79,12 @@ def read_chunk(
     fmt: str = "parquet",
     schema=None,
 ) -> DataFrame:
-    """Read one chunk with its own on-disk schema (segments may have
-    evolved columns; mergeSchema unifies within the chunk).
+    """Read one chunk with its own on-disk schema: segments may have
+    evolved columns, and the read schema is the union
+    (:func:`~go_cdc_spark.evolve.union_schema`) of the chunk's parquet
+    footer schemas, read driver-side by :func:`_footer_schema` — no
+    schema-inference Spark job per epoch, unlike ``mergeSchema``.
+    Columns a segment lacks read as null.
 
     ``fmt="json"`` reads JSON-lines segments — the shape a MongoDB
     change-stream export / Debezium-style feed lands in. JSON is not
@@ -74,7 +97,7 @@ def read_chunk(
     """
     paths = [os.path.join(log_dir, f"segment={k}") for k in chunk.segments]
     if fmt == "parquet":
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
+        df = spark.read.schema(_footer_schema(paths)).parquet(*paths)
     elif fmt == "json":
         if schema is None:
             raise ValueError(

@@ -163,8 +163,9 @@ def replay_chunked(
 def _source_schema(cfg: PipelineConfig, lake: ParquetLakeTable):
     """Fixed read schema for non-self-describing formats (json): the
     configured schema, else EVENT_SCHEMA widened by the table's evolved
-    payload (absent columns parse as null). Parquet keeps None: its
-    footer schema + mergeSchema is strictly better. NOTE: a column that
+    payload (absent columns parse as null). Parquet keeps None:
+    ``read_chunk`` builds its read schema from the chunk's own footers,
+    which know every column the chunk carries. NOTE: a column that
     first appears MID-LOG must be declared via cfg.source_schema_json
     (≙ a schema-registry contract) — the fallback only knows columns
     the table has already seen, so an undeclared new JSON field is

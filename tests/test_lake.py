@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from go_cdc_spark import schemas
@@ -1240,3 +1241,236 @@ def test_vacuum_grace_ages_orphans_but_reclaims_superseded_now(
     assert any("v9-cdeadbeef" in r for r in removed2)
     assert not os.path.isdir(orphan)
     assert t.read().collect()[0]["content"] == "v3"  # table intact
+
+
+def _old_apply_rows(t, m, batch):
+    """The rows the replaced apply_batch body handed to the write,
+    rebuilt from public pieces: a bucket due for a new base merges the
+    table's FOLDED read (``read(internal=True)``) with its batch rows
+    (``merge_resolved``); a MoR delta-only bucket LWW-reduces its batch
+    rows alone (``lww_resolve``); the two pieces are unioned."""
+    from pyspark.sql import types as T
+
+    from go_cdc_spark.evolve import align_to_schema, union_schema
+    from go_cdc_spark.operators.merge import merge_resolved
+    from go_cdc_spark.sinks.lake import bucket_expr, internal_schema, logical_schema
+
+    n = m["n_buckets"]
+    table = logical_schema(m)
+    extra = [f for f in batch.schema.fields if f.name not in {*K, *O, "op"}]
+    new_schema = union_schema(
+        table, T.StructType([f for f in table.fields if f.name in K] + extra)
+    )
+    payload = [f.name for f in new_schema.fields if f.name not in K]
+    phys = internal_schema(new_schema, K, O)
+    b = batch.withColumn("bucket", bucket_expr(K, n))
+    for f in new_schema.fields:
+        if f.name not in b.columns:
+            b = b.withColumn(f.name, F.lit(None).cast(f.dataType))
+    affected = sorted(r["bucket"] for r in b.select("bucket").distinct().collect())
+    if m["mode"] == "mor":
+        due = [
+            x for x in affected
+            if len(m["deltas"].get(str(x), [])) + 1 >= m["compact_every"]
+        ]
+    else:
+        due = affected
+    delta_only = sorted(set(affected) - set(due))
+    pieces = []
+    if due:
+        cur = t.read(buckets=due, manifest=m, internal=True)
+        pieces.append(merge_resolved(
+            align_to_schema(cur, phys),
+            b.filter(F.col("bucket").isin(due)).drop("bucket"), K, O, payload,
+        ))
+    if delta_only:
+        pieces.append(lww_resolve(
+            align_to_schema(b.filter(F.col("bucket").isin(delta_only)), phys),
+            K, O, payload, validate=False,
+        ))
+    out = pieces[0]
+    for p in pieces[1:]:
+        out = out.unionByName(p)
+    return out.withColumn("bucket", bucket_expr(K, n))
+
+
+def _equivalence_batches(spark):
+    """Raw event batches: re-deliveries, events older than the stored
+    row, deletes (and a late insert behind a tombstone), and a column
+    ``n`` that appears from the fourth batch on."""
+    keys = [(f"r{i}", "p", "c") for i in range(24)]
+    raw = [
+        [_row("i", 10 + i, k, f"a{i}") for i, k in enumerate(keys)]
+        + [_row("i", 10, keys[0], "a0")],  # re-delivered in its own batch
+        [_row("u", 100 + i, k, f"b{i}") for i, k in enumerate(keys[:9])]
+        + [_row("u", 5, keys[12], "stale")],  # older than the stored row
+        [_row("d", 200 + i, k) for i, k in enumerate(keys[3:7])]
+        + [_row("u", 210, keys[20], "c20"), _row("u", 211, keys[20], "c20b")],
+        [_row("u", 300 + i, k, f"d{i}") for i, k in enumerate(keys[10:18])]
+        + [_row("i", 150, keys[4], "resurrect?")],  # behind the tombstone
+        [_row("u", 400 + i, k, f"e{i}") for i, k in enumerate(keys[::3])]
+        + [_row("u", 305, keys[15], "d5")],  # re-delivery of batch 3's event
+        [_row("i", 500, keys[5], "back"), _row("d", 501, keys[8])]
+        + [_row("u", 510 + i, k, f"f{i}") for i, k in enumerate(keys[16:])],
+    ]
+    out = []
+    for e, rows in enumerate(raw):
+        df = _events(spark, rows)
+        if e >= 3:
+            df = df.withColumn("n", (F.col("seq") % 7).cast("long"))
+        out.append(df)
+    return out
+
+
+@pytest.mark.parametrize(
+    "mode,compact_every", [("mor", 2), ("mor", 3), ("cow", 8)]
+)
+def test_apply_batch_matches_folded_read_composition(
+    spark, tmpdir_path, mode, compact_every
+):
+    """apply_batch's one reduce over the raw scan of the rewritten
+    buckets equals the composition it replaced (folded read, then
+    ``merge_resolved``, plus ``lww_resolve`` of the delta-only rows):
+    at every version both tables hold the same internal state,
+    tombstones included, and the epoch wrote the same rows."""
+    new = ParquetLakeTable.create(
+        spark, f"{tmpdir_path}/new", schemas.TABLE_SCHEMA, K, 4, mode=mode,
+        compact_every=compact_every,
+    )
+    old = ParquetLakeTable.create(
+        spark, f"{tmpdir_path}/old", schemas.TABLE_SCHEMA, K, 4, mode=mode,
+        compact_every=compact_every,
+    )
+    written, current = {}, {}
+
+    def rows(df):
+        cols = sorted(df.columns)
+        return sorted((tuple(r[c] for c in cols) for r in df.collect()), key=repr)
+
+    def capture(t, name, old_body):
+        real = t._write_version_data
+
+        def write(df, m, rel_dir, n_files_hint, **kw):
+            if old_body:
+                df = _old_apply_rows(t, m, current["batch"])
+            written[name] = rows(df)
+            return real(df, m, rel_dir, n_files_hint, **kw)
+
+        t._write_version_data = write
+
+    capture(new, "new", old_body=False)
+    capture(old, "old", old_body=True)
+    compacted = set()
+    for e, batch in enumerate(_equivalence_batches(spark)):
+        current["batch"] = batch
+        before = old.manifest()
+        s_new = new.apply_batch(batch, f"e{e}")
+        s_old = old.apply_batch(batch, f"e{e}")
+        assert written["new"] == written["old"], e
+        assert (s_new.version, s_new.affected_buckets, s_new.bucket_counts) == (
+            s_old.version, s_old.affected_buckets, s_old.bucket_counts
+        )
+        assert rows(new.read(internal=True)) == rows(old.read(internal=True)), e
+        m_new, m_old = new.manifest(), old.manifest()
+        assert {b: len(ds) for b, ds in m_new["deltas"].items()} == {
+            b: len(ds) for b, ds in m_old["deltas"].items()
+        }
+        assert m_new["bucket_counts"] == m_old["bucket_counts"]
+        compacted |= {
+            b for b in before["deltas"] if b not in m_old["deltas"]
+        }
+    assert "n" in new.schema.fieldNames()
+    if mode == "mor":  # the sequence exercised both kinds of bucket
+        assert compacted and m_new["deltas"]
+
+
+def test_mor_compaction_epoch_one_reduce_and_capped_write_tasks(spark, tmpdir_path):
+    """On a MoR epoch where half the touched buckets get a new base and
+    half take a delta, the DataFrame handed to the write shuffles once
+    (one LWW reduce; the folded-read composition shuffled three times:
+    the read-side fold, the merge, the delta-only reduce), and the write
+    job runs no more tasks than the cluster has cores although it
+    writes 16 buckets."""
+    from go_cdc_spark.plans.inspect import shuffle_count
+    from go_cdc_spark.sinks.lake import key_buckets
+
+    sc = spark.sparkContext
+    t = ParquetLakeTable.create(
+        spark, tmpdir_path, schemas.TABLE_SCHEMA, K, 16, mode="mor",
+        compact_every=2,
+    )
+    keys = [(f"r{i}", "p", "c") for i in range(200)]
+    key_fields = [schemas.TABLE_SCHEMA[c] for c in K]
+    buckets = key_buckets(spark, keys, key_fields, 16)
+    low = [k for k, b in zip(keys, buckets) if b < 8]
+    t.apply_batch(_events(spark, [_row("i", 1, k) for k in low]), "e0")
+    captured = []
+    real = t._write_version_data
+
+    def spy(df, *a, **kw):
+        captured.append(df)
+        return real(df, *a, **kw)
+
+    t._write_version_data = spy
+    group = f"lake-write-tasks-{os.path.basename(tmpdir_path)}"
+    sc.setJobGroup(group, "compaction epoch")
+    try:
+        s = t.apply_batch(
+            _events(spark, [_row("u", 2, k, "v2") for k in keys]), "e1"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    m = t.manifest()
+    assert len(s.affected_buckets) == 16
+    assert set(m["buckets"]) == {str(b) for b in range(8)}  # new bases
+    assert set(m["deltas"]) == {str(b) for b in range(8, 16)}  # deltas
+    assert shuffle_count(captured[0]) == 1
+
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    result_stage = tracker.getStageInfo(max(write_job.stageIds))
+    assert 0 < result_stage.numTasks <= sc.defaultParallelism < 16
+    assert t.read().count() == len(keys)
+
+
+def test_files_per_bucket_keeps_its_slots_apart(spark, tmpdir_path):
+    """With ``files_per_bucket=2`` every bucket gets exactly two files,
+    in its ingest delta and in its compacted base, although the write
+    runs no more tasks than the cluster has cores: a bucket's two key
+    slots have consecutive task ids, so they never share a task (a task
+    writes one file per bucket it holds). The slot hash is independent
+    of the bucket hash; under the same xxhash64 the slot is a function
+    of the bucket and each bucket got one file."""
+    n, fpb = 8, 2
+    sc = spark.sparkContext
+    t = ParquetLakeTable.create(
+        spark, tmpdir_path, schemas.TABLE_SCHEMA, K, n, mode="mor",
+        files_per_bucket=fpb,
+    )
+    keys = [(f"r{i}", "p", "c") for i in range(400)]
+    group = f"lake-fpb-{os.path.basename(tmpdir_path)}"
+    sc.setJobGroup(group, "files_per_bucket ingest")
+    try:
+        s = t.apply_batch(_events(spark, [_row("i", 1, k) for k in keys]), "e0")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(s.affected_buckets) == n and n * fpb > sc.defaultParallelism
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    assert tracker.getStageInfo(max(write_job.stageIds)).numTasks <= sc.defaultParallelism
+
+    def files(dirs):
+        return {
+            int(b): len([
+                f for f in os.listdir(os.path.join(tmpdir_path, d[-1], f"bucket={b}"))
+                if f.endswith(".parquet")
+            ])
+            for b, d in dirs.items()
+        }
+
+    assert files(t.manifest()["deltas"]) == {b: fpb for b in range(n)}
+    assert t.compact().applied
+    m = t.manifest()
+    assert not m["deltas"]
+    assert files({b: [d] for b, d in m["buckets"].items()}) == {b: fpb for b in range(n)}
+    assert t.read().count() == len(keys)

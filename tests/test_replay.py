@@ -223,6 +223,43 @@ def test_schema_evolution_mid_log(spark, tmpdir_path):
     assert out["content_sha"].isna().any() and out["content_sha"].notna().any()
 
 
+def test_read_chunk_schema_from_footers_starts_no_job(spark, tmpdir_path):
+    """read_chunk reads parquet under the union of the chunk's footer
+    schemas. On a two-segment chunk where only the later segment carries
+    ``content_sha``, the schema and rows equal the ``mergeSchema`` read
+    it replaces, and building the DataFrame starts no Spark job; the
+    ``mergeSchema`` read starts its schema-inference job right there."""
+    from go_cdc_spark.sources.oplog import Chunk, read_chunk
+
+    log = os.path.join(tmpdir_path, "log")
+    spec = LogSpec(
+        n_events=3_000, segment_events=1_500, files_per_segment=2,
+        evolve_from_segment=1, seed=5,
+    )
+    write_segments(spark, spec, log)
+    paths = [os.path.join(log, f"segment={k}") for k in (0, 1)]
+    sc = spark.sparkContext
+
+    def planned(name, build):
+        group = f"plan-{name}-{os.path.basename(tmpdir_path)}"
+        sc.setJobGroup(group, name)
+        try:
+            df = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    new, new_jobs = planned("footers", lambda: read_chunk(spark, log, Chunk(0, [0, 1])))
+    old, old_jobs = planned(
+        "merge", lambda: spark.read.option("mergeSchema", "true").parquet(*paths)
+    )
+    assert new_jobs == 0 and old_jobs >= 1
+    assert new.schema == old.schema and "content_sha" in new.columns
+    cols = new.columns
+    assert sorted(new.collect()) == sorted(old.select(*cols).collect())
+    assert new.filter("content_sha IS NULL").count() == 1_500
+
+
 def test_streaming_replay_matches_oracle(spark, tmpdir_path):
     cfg = _cfg(tmpdir_path, pipeline_id="stream1")
     spec = LogSpec(n_events=3_000, segment_events=1_000, dup_every=71, seed=29)
